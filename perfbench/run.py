@@ -1,7 +1,7 @@
 """Repository benchmark: Citibike backfill, monthly refresh and catalog
 queries against ``local[$SPARK_GRAFT_CPUS]``.
 
-    python3 perfbench/run.py --workload backfill --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload backfill_refresh --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout. Inputs are generated from ``--seed``;
 every file the run writes stays under ``.perfbench-work/`` (removed at the
@@ -28,6 +28,9 @@ ROOT = os.getcwd()
 WORK = os.path.join(ROOT, ".perfbench-work")
 OUT = os.path.join(ROOT, ".perfbench-out")
 PACKAGE = "citibike_deep_dive_spark"
+# unless SPARK_DRIVER_MEMORY is set: on 4 vCPUs the package's 8g default
+# ran the catalog queries about a fifth slower and less steadily, and
+# doubled the peak RSS (see README)
 DRIVER_MEMORY = "2g"
 
 
@@ -36,7 +39,12 @@ def _loadavg() -> list[float]:
         return [float(x) for x in fh.read().split()[:3]]
 
 
-def _hwm_mb(pid: int | str) -> float:
+def _pids(spark) -> tuple[str, str]:
+    """This Python driver process and the JVM behind the session."""
+    return "self", str(spark._jvm.java.lang.ProcessHandle.current().pid())
+
+
+def _hwm_mb(pid: str) -> float:
     """Peak resident set size of a process, in MB."""
     with open(f"/proc/{pid}/status") as fh:
         for line in fh:
@@ -45,14 +53,26 @@ def _hwm_mb(pid: int | str) -> float:
     raise RuntimeError(f"no VmHWM for pid {pid}")
 
 
+def _reset_hwm(pids) -> bool:
+    """Restart each process's peak RSS from its current RSS, so the peak
+    covers only what runs afterwards; False if the kernel refuses."""
+    try:
+        for pid in pids:
+            with open(f"/proc/{pid}/clear_refs", "w") as fh:
+                fh.write("5")
+    except OSError:
+        return False
+    return True
+
+
 def _prepare_env() -> str:
     """Pin every scratch location inside the checkout; returns the CPU
     count the session will use."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     tmp = os.path.join(WORK, "tmp")
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", DRIVER_MEMORY)
     os.environ.update(
         SPARK_GRAFT_CPUS=cpus,
-        SPARK_DRIVER_MEMORY=DRIVER_MEMORY,
         SPARK_LOCAL_DIRS=os.path.join(WORK, "spark-local"),
         TMPDIR=tmp,
         PYTHONPATH=os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p),
@@ -173,7 +193,7 @@ def end_to_end(wl, ops, setup_s: float, peak_rss_mb: float) -> tuple[dict, dict]
 PER_LAYER_UNITS = {
     "zips.extract_s": "s", "zips.bytes_in": "bytes", "zips.csv_bytes_out": "bytes",
     "normalize.rows_in": "count", "normalize.rows_kept": "count",
-    "normalize.keep_ratio": "ratio", "normalize.scan_exec_s": "s",
+    "normalize.keep_ratio": "ratio", "normalize.scan_exec_s": "s", "normalize.scan_s": "s",
     "discovery.list_s": "s", "state.load_s": "s", "state.save_s": "s",
     "state.gate_new": "count", "state.gate_skipped": "count",
     **{
@@ -231,12 +251,15 @@ def _measure(args, workloads, cpus, load_before, t_begin) -> int:
     setup_detail = {"session_start_s": session_start_s, **wl.setup(spark)}
     setup_s = time.perf_counter() - t_begin
 
+    driver_memory = spark.sparkContext.getConf().get("spark.driver.memory")
     if args.trace == 0:
+        pids = _pids(spark)
+        hwm_reset = _reset_hwm(pids)
         results = _run_passes(wl, spark, args.seconds)
+        peak = sum(_hwm_mb(pid) for pid in pids)
         ops, problems = _account(wl, spark, results)
-        peak = _hwm_mb("self") + _hwm_mb(spark._jvm.java.lang.ProcessHandle.current().pid())
         metrics, detail = end_to_end(wl, ops, setup_s, peak)
-        detail["notes"] = [r.notes for r in results]
+        detail.update(notes=[r.notes for r in results], peak_rss_reset=hwm_reset)
         spark.stop()
     else:
         metrics, detail, ops, problems = _traced(args, wl, spark, log_dir, session_start_s)
@@ -245,7 +268,7 @@ def _measure(args, workloads, cpus, load_before, t_begin) -> int:
     context = {
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "nproc": len(os.sched_getaffinity(0)), "spark_graft_cpus": int(cpus),
-        "driver_memory": DRIVER_MEMORY,
+        "driver_memory": driver_memory,
         "loadavg_before": load_before, "loadavg_after": _loadavg(),
         "failed_ops_ratio": failed / len(ops), "setup": setup_detail, **detail,
         "ops": [[o.kind, o.name, round(o.latency_s, 4), o.ok] for o in ops],

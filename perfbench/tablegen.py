@@ -5,7 +5,9 @@ documents embeddings`` as one Parquet file each, with the schemas and
 value distributions the query catalog (``citibike_deep_dive_spark.plans``)
 is written against: a TPC-H-shaped star schema scaled by ``sf``, a
 30-day event stream, short bag-of-words documents (5 % near-duplicates,
-a few exact duplicates) and unit-norm 64-d embeddings.
+a few exact duplicates) and unit-norm 64-d embeddings. Types, row counts
+and value distributions follow the reference tables that ``bench.py`` and
+the test suite read; ``tablecheck.py`` compares the two.
 
 Single process, numpy ``default_rng(seed)``.
 """
@@ -54,13 +56,10 @@ def _documents(rng, n: int) -> dict:
     lengths = rng.integers(10, 101, n)
     vocab = np.array(WORDS)
     texts = [" ".join(vocab[rng.integers(0, len(vocab), k)]) for k in lengths]
-    # 5 % near-duplicates of an earlier document, 0.2 % exact copies
-    for i in np.flatnonzero(rng.random(n) < 0.05):
-        if i:
-            texts[i] = texts[rng.integers(0, i)] + " dup"
-    for i in np.flatnonzero(rng.random(n) < 0.002):
-        if i:
-            texts[i] = texts[rng.integers(0, i)]
+    # 5 % of the documents become another one plus " dup"; two that copy
+    # the same document are the table's exact duplicates
+    for i, j in zip(rng.choice(n, n // 20, replace=False), rng.integers(0, n, n // 20)):
+        texts[i] = texts[j] + " dup"
     return {
         "doc_id": pa.array(np.arange(n, dtype=np.int64)),
         "text": pa.array(texts),
@@ -77,7 +76,7 @@ def generate(out_dir: str, sf: float, seed: int) -> dict[str, int]:
     n_cust, n_supp = max(int(150_000 * sf), 10), max(int(10_000 * sf), 5)
     n_part, n_ord = max(int(200_000 * sf), 20), max(int(1_500_000 * sf), 100)
     n_line, n_ev = max(int(6_000_000 * sf), 400), max(int(1_000_000 * sf), 100)
-    n_doc, n_emb = max(int(50_000 * sf), 200), max(int(20_000 * sf), 200)
+    n_doc, n_emb = max(int(50_000 * sf), 500), max(int(20_000 * sf), 500)
     n_users = max(int(15_000 * sf), 10)
 
     _write(out_dir, "region", {

@@ -36,6 +36,18 @@ class Op:
 
 
 @dataclass
+class _Collected:
+    """The part of a DataFrame ``oracle_harness.compare`` reads, kept after
+    the DataFrame has run."""
+
+    rows: list
+    columns: list[str]
+
+    def collect(self) -> list:
+        return self.rows
+
+
+@dataclass
 class PassResult:
     ops: list[Op]
     problems: list[str] = field(default_factory=list)
@@ -102,9 +114,9 @@ class BackfillRefresh:
     Refresh: with that backlog as history, small months land one at a
     time in the inbox, which keeps every old archive. Each landing is timed
     until the pipeline returns and the export is written, so per-archive
-    fixed cost dominates; ``latency_*`` are these latencies. February and
-    March land, then January (out of order), then February again, which
-    must be a cheap no-op.
+    fixed cost dominates; ``latency_*`` are these latencies. March lands,
+    then February (out of order), then March again, which must be a cheap
+    no-op.
 
     Every pass starts from an empty warehouse; pass i's refresh months are
     in year 2024 + i.
@@ -113,13 +125,13 @@ class BackfillRefresh:
     name = "backfill_refresh"
     min_passes = 1
     latency_kind, throughput_kind = "refresh", "backfill"
-    latency_ops_per_pass = 3
-    LEGACY_TRIPS = 80_000
-    MODERN_TRIPS = 80_000
+    latency_ops_per_pass = 2
+    LEGACY_TRIPS = 60_000
+    MODERN_TRIPS = 60_000
     MONTH_TRIPS = 20_000
     WARM_TRIPS = 20_000
     STATIONS = 800
-    PATTERN = ((2, "refresh"), (3, "refresh"), (1, "refresh"), (2, "redrop"))
+    PATTERN = ((3, "refresh"), (2, "refresh"), (3, "redrop"))
     NOOP_MAX_SHARE = 0.25  # a re-drop may cost at most this share of a refresh
 
     def __init__(self, work: str, seed: int) -> None:
@@ -219,13 +231,14 @@ class CatalogQueries:
     """The reference-parity and shared-operator subset of the catalog's
     headline queries at sf0.1. Every execution rebuilds its plan, so no
     checkpoint or cache from an earlier run subsidizes it; only the JVM and
-    code generation are warmed, by one untimed run of every query."""
+    code generation are warmed, by one untimed run of every query. That
+    run collects its rows, and ``final_checks`` compares them with the
+    query's DuckDB oracle on the same tables."""
 
     name = "catalog_queries"
     min_passes = 3
     latency_kind = throughput_kind = "query"
     SF = 0.1
-    SMALL_SF = 0.002
     QUERIES = (
         "linegraph_conditional_counts",
         "heatmap_hourly_counts",
@@ -248,12 +261,12 @@ class CatalogQueries:
 
         t0 = time.perf_counter()
         self.data = os.path.join(self.work, "sf")
-        self.small = os.path.join(self.work, "small")
         tablegen.generate(self.data, self.SF, self.seed)
-        tablegen.generate(self.small, self.SMALL_SF, self.seed + 1)
         t1 = time.perf_counter()
+        self.warm_rows = {}
         for q in self.QUERIES:
-            CATALOG[q].build(spark, self.data).write.format("noop").mode("overwrite").save()
+            df = CATALOG[q].build(spark, self.data)
+            self.warm_rows[q] = _Collected(df.collect(), df.columns)
         return {"inputs_s": t1 - t0, "warmup_s": time.perf_counter() - t1}
 
     def run_pass(self, spark, tracer=None) -> PassResult:
@@ -274,19 +287,18 @@ class CatalogQueries:
         return res
 
     def final_checks(self, spark) -> dict[str, list[str]]:
-        """Each query once against its DuckDB oracle, on a small copy of
-        the tables (same generator) to keep checking cheap."""
+        """Each query's warm-up rows against its DuckDB oracle, on the
+        tables the passes time."""
         from citibike_deep_dive_spark.plans import CATALOG
         from tests.oracle_harness import compare, duckdb_connection
 
-        con = duckdb_connection(self.small)
+        con = duckdb_connection(self.data)
         try:
             out = {}
             for q in self.QUERIES:
-                spec = CATALOG[q]
-                if spec.oracle is not None:
-                    found = compare(spec.build(spark, self.small), con, spec.oracle)
-                    out[q] = [f"{q}: {p}" for p in found]
+                oracle = CATALOG[q].oracle
+                if oracle is not None:
+                    out[q] = [f"{q}: {p}" for p in compare(self.warm_rows[q], con, oracle)]
             return out
         finally:
             con.close()
