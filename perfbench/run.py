@@ -8,7 +8,9 @@ every file the run writes stays under ``.perfbench-work/`` (removed at the
 end) and ``.perfbench-out/`` (span dumps). ``--trace 0`` measures the
 end-to-end metrics; ``--trace 1`` runs the workload traced in a session
 with the Spark event log on, then as many passes untraced in a new session,
-and reports the per-layer metrics. The last line of stdout is the result JSON;
+and reports the per-layer metrics. Every end-to-end time is unstolen time:
+wall time less the share the hypervisor stole (``workloads.Stopwatch``).
+The last line of stdout is the result JSON;
 the line before it carries host context and the sample details. The exit
 code is non-zero if any operation fails or any output check does.
 """
@@ -175,18 +177,29 @@ def _account(wl, spark, results) -> tuple[list, list[str]]:
     return ops, problems
 
 
-def end_to_end(wl, ops, setup_s: float, peak_rss_mb: float) -> tuple[dict, dict]:
-    lat = [o.latency_s for o in ops if o.kind == wl.latency_kind]
+def _timings(wl, ops, time_of) -> tuple[float, float, float, float]:
+    """(p50, tail, tail percentile, throughput) of the operations, each
+    timed by ``time_of``."""
+    lat = [time_of(o) for o in ops if o.kind == wl.latency_kind]
     tput = [o for o in ops if o.kind == wl.throughput_kind]
     tail, pct = _tail(lat, wl.min_passes * wl.latency_ops_per_pass)
+    return statistics.median(lat), tail, pct, sum(o.work for o in tput) / sum(map(time_of, tput))
+
+
+def end_to_end(wl, ops, setup_s: float, peak_rss_mb: float) -> tuple[dict, dict]:
+    p50, tail, pct, tput = _timings(wl, ops, lambda o: o.latency_s)
     metrics = {
         "setup_s": (setup_s, "s"),
-        "latency_p50_s": (statistics.median(lat), "s"),
+        "latency_p50_s": (p50, "s"),
         "latency_tail_s": (tail, "s"),
-        "throughput_per_s": (sum(o.work for o in tput) / sum(o.latency_s for o in tput), "1/s"),
+        "throughput_per_s": (tput, "1/s"),
         "peak_rss_mb": (peak_rss_mb, "MB"),
     }
-    detail = {"samples": len(lat), "tail_percentile": pct}
+    w50, wtail, _, wtput = _timings(wl, ops, lambda o: o.wall_s)
+    detail = {
+        "samples": sum(o.kind == wl.latency_kind for o in ops), "tail_percentile": pct,
+        "wall_clock": {"latency_p50_s": w50, "latency_tail_s": wtail, "throughput_per_s": wtput},
+    }
     return {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()}, detail
 
 
@@ -213,7 +226,9 @@ PER_LAYER_UNITS = {
 
 
 def main(argv: list[str] | None = None) -> int:
-    t_begin = time.perf_counter()
+    import workloads
+
+    since_start = workloads.Stopwatch()
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
@@ -225,8 +240,6 @@ def main(argv: list[str] | None = None) -> int:
         print(f"perfbench: no {PACKAGE}/ under {ROOT}; run from a checkout root",
               file=sys.stderr)
         return 2
-    import workloads
-
     if args.workload not in workloads.WORKLOADS:
         print(f"perfbench: unknown workload {args.workload!r}; "
               f"choose from {sorted(workloads.WORKLOADS)}", file=sys.stderr)
@@ -236,30 +249,38 @@ def main(argv: list[str] | None = None) -> int:
     cpus = _prepare_env()
     load_before = _loadavg()
     try:
-        return _measure(args, workloads, cpus, load_before, t_begin)
+        return _measure(args, workloads, cpus, load_before, since_start)
     finally:
         _stop_jvm()
         shutil.rmtree(WORK, ignore_errors=True)
 
 
-def _measure(args, workloads, cpus, load_before, t_begin) -> int:
+def _measure(args, workloads, cpus, load_before, since_start) -> int:
     wl = workloads.WORKLOADS[args.workload](WORK, args.seed)
     log_dir = os.path.join(WORK, "eventlog") if args.trace else None
     t0 = time.perf_counter()
     spark = _start_session(event_log=log_dir)
     session_start_s = time.perf_counter() - t0
     setup_detail = {"session_start_s": session_start_s, **wl.setup(spark)}
-    setup_s = time.perf_counter() - t_begin
+    setup_wall_s, setup_s, _, _ = since_start.stop()
 
     driver_memory = spark.sparkContext.getConf().get("spark.driver.memory")
     if args.trace == 0:
         pids = _pids(spark)
         hwm_reset = _reset_hwm(pids)
+        passes = workloads.Stopwatch()
         results = _run_passes(wl, spark, args.seconds)
-        peak = sum(_hwm_mb(pid) for pid in pids)
+        _, _, busy, stolen = passes.stop()
+        peaks = {name: _hwm_mb(pid) for name, pid in zip(("python", "jvm"), pids)}
+        peak = sum(peaks.values())
         ops, problems = _account(wl, spark, results)
         metrics, detail = end_to_end(wl, ops, setup_s, peak)
-        detail.update(notes=[r.notes for r in results], peak_rss_reset=hwm_reset)
+        detail["wall_clock"]["setup_s"] = setup_wall_s
+        detail.update(
+            steal_share=stolen / (busy + stolen) if busy + stolen else 0.0,
+            notes=[r.notes for r in results], peak_rss_reset=hwm_reset,
+            peak_rss_mb_by_process=peaks,
+        )
         spark.stop()
     else:
         metrics, detail, ops, problems = _traced(args, wl, spark, log_dir, session_start_s)
@@ -271,7 +292,7 @@ def _measure(args, workloads, cpus, load_before, t_begin) -> int:
         "driver_memory": driver_memory,
         "loadavg_before": load_before, "loadavg_after": _loadavg(),
         "failed_ops_ratio": failed / len(ops), "setup": setup_detail, **detail,
-        "ops": [[o.kind, o.name, round(o.latency_s, 4), o.ok] for o in ops],
+        "ops": [[o.kind, o.name, round(o.latency_s, 4), round(o.wall_s, 4), o.ok] for o in ops],
     }
     print(json.dumps({"perfbench": context}))
     correct = not problems and failed == 0
