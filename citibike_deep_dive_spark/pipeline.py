@@ -2,15 +2,20 @@
 (citibike_data_process/main.py:23-83) as one idempotent function.
 
 Per new archive (state-gated, chronological):
-  discover → extract → read CSVs → normalize_trips → update the derived
-  tables (linegraph, heatmap, dock, trips) → advance the state table —
+  discover → extract → read CSVs → normalize_trips (cached once) →
+  rewrite the derived tables (linegraph, heatmap, dock, trips) → advance
+  and save the state table —
 then optionally export the warehouse as a DuckDB file (the reference's
 terminal artifact) and upload it to S3.
 
 Differences from the reference, by design (SURVEY.md §7):
 - tables are Parquet dirs updated by atomic rewrite, not in-place UPDATEs;
-- the per-file × per-table loop keeps the reference's ordering so the
-  StatusData gate stays correct across partial runs;
+- archives are processed one at a time, in order, and the state is saved
+  after each, so the StatusData gate stays correct across partial runs;
+- within an archive the four table rewrites run concurrently, one driver
+  thread each (none reads another's output), so Spark schedules their
+  jobs side by side; the state is saved only once all four succeeded;
+- the state table is read and written on the driver with pyarrow;
 - route enrichment uses the injectable geometry provider (offline
   deterministic by default — no network in the data path).
 """
@@ -19,9 +24,12 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from .normalize import normalize_trips
 from .operators.dockmap import dock_aggregate, dock_merge
@@ -77,36 +85,78 @@ def process_archive(
     geometry_provider: GeometryProvider | None = None,
 ) -> None:
     """Ingest one archive and merge it into all derived tables (the body
-    of the reference's per-file loop, main.py:62-76)."""
+    of the reference's per-file loop, main.py:62-76).
+
+    The normalized trips are cached by one action, then each table's
+    read → build → write chain runs in its own thread. Every thread
+    inherits the caller's local properties (job group, scheduler pool).
+    The first failure is re-raised once all four threads have finished."""
     paths = extract_to_staging(cand.name, staging_dir)
     raw = read_staged_csvs(spark, paths)
     trips = normalize_trips(raw, file_year=str(cand.year)).cache()
+    builders: dict[str, Callable[[DataFrame | None], DataFrame]] = {
+        "linegraph": lambda old: linegraph_update(old, trips),
+        "heatmap": lambda old: heatmap_update(old, trips),
+        "dock": lambda old: dock_merge(old, dock_aggregate(trips)),
+        "trips": lambda old: tripsmap_update(
+            old,
+            enrich_routes(top_trips(trip_aggregate(trips), k=top_k), geometry_provider),
+        ),
+    }
+
+    def rewrite(name: str) -> None:
+        old = read_table(spark, warehouse_dir, name)
+        write_table(builders[name](old), warehouse_dir, name)
+
     try:
-        write_table(
-            linegraph_update(read_table(spark, warehouse_dir, "linegraph"), trips),
-            warehouse_dir,
-            "linegraph",
-        )
-        write_table(
-            heatmap_update(read_table(spark, warehouse_dir, "heatmap"), trips),
-            warehouse_dir,
-            "heatmap",
-        )
-        write_table(
-            dock_merge(read_table(spark, warehouse_dir, "dock"), dock_aggregate(trips)),
-            warehouse_dir,
-            "dock",
-        )
-        enriched = enrich_routes(
-            top_trips(trip_aggregate(trips), k=top_k), geometry_provider
-        )
-        write_table(
-            tripsmap_update(read_table(spark, warehouse_dir, "trips"), enriched),
-            warehouse_dir,
-            "trips",
-        )
+        trips.count()
+        with ThreadPoolExecutor(max_workers=len(DERIVED_TABLES)) as pool:
+            # wrap once per thread: each gets its own copy of the properties
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(rewrite), name)
+                for name in DERIVED_TABLES
+            ]
+            for f in futures:
+                f.result()
     finally:
         trips.unpersist()
+
+
+def ingest_new(
+    spark: SparkSession,
+    candidates: list[CandidateFile],
+    warehouse_dir: str,
+    state_path: str | None = None,
+    staging_dir: str | None = None,
+    top_k: int = 30,
+    geometry_provider: GeometryProvider | None = None,
+    fetch: Callable[[list[CandidateFile]], list[CandidateFile]] | None = None,
+) -> PipelineResult:
+    """Gate ``candidates`` on the state table and ingest the new ones in
+    order, saving the state after each. ``fetch`` maps the gated work list
+    to local archives (remote mode downloads them); by default the
+    candidates are local files already."""
+    os.makedirs(warehouse_dir, exist_ok=True)
+    state_path = state_path or os.path.join(warehouse_dir, "_state")
+    staging_dir = staging_dir or os.path.join(warehouse_dir, "_staging")
+    os.makedirs(staging_dir, exist_ok=True)
+
+    state = load_state(state_path)
+    todo = new_files(candidates, state)
+    for cand in fetch(todo) if fetch else todo:
+        process_archive(
+            spark,
+            cand,
+            staging_dir,
+            warehouse_dir,
+            top_k=top_k,
+            geometry_provider=geometry_provider,
+        )
+        # advance + persist state after EVERY file (main.py:64-76 ordering)
+        # so a crash mid-run never reprocesses completed archives
+        state = advance_state(state, cand)
+        save_state(state, state_path)
+    return PipelineResult(processed=todo, skipped=len(candidates) - len(todo))
 
 
 def run_pipeline(
@@ -121,25 +171,12 @@ def run_pipeline(
     """Discover archives in ``input_dir``, ingest only the state-gated new
     ones, maintain the derived tables under ``warehouse_dir``. Idempotent:
     a second run over the same inputs processes nothing."""
-    os.makedirs(warehouse_dir, exist_ok=True)
-    state_path = state_path or os.path.join(warehouse_dir, "_state")
-    staging_dir = staging_dir or os.path.join(warehouse_dir, "_staging")
-    os.makedirs(staging_dir, exist_ok=True)
-
-    state = load_state(spark, state_path)
-    candidates = discover_local(input_dir)
-    todo = new_files(candidates, state)
-    for cand in todo:
-        process_archive(
-            spark,
-            cand,
-            staging_dir,
-            warehouse_dir,
-            top_k=top_k,
-            geometry_provider=geometry_provider,
-        )
-        # advance + persist state after EVERY file (main.py:64-76 ordering)
-        # so a crash mid-run never reprocesses completed archives
-        state = advance_state(state, cand)
-        save_state(spark, state, state_path)
-    return PipelineResult(processed=todo, skipped=len(candidates) - len(todo))
+    return ingest_new(
+        spark,
+        discover_local(input_dir),
+        warehouse_dir,
+        state_path,
+        staging_dir,
+        top_k=top_k,
+        geometry_provider=geometry_provider,
+    )

@@ -10,7 +10,7 @@ local mode. Re-expressed here as:
     fetch listing XML → parse_bucket_listing_xml (export.py)
     → discover_listing (discovery.py) → new_files state gate (state.py)
     → parallel driver-side download into a cache dir
-    → process_archive per file, advancing state after each (pipeline.py)
+    → pipeline.ingest_new: process_archive per file, saving state after each
 
 Design notes:
 - HTTP is injectable (``http_get``) so tests run against a local fake
@@ -132,32 +132,25 @@ def run_remote_pipeline(
 ):
     """The reference's remote flow end to end, state-gated BEFORE any
     download (new_file_check runs on the key list, ingestion.py:66-77, so
-    already-ingested archives cost zero bytes). Chronological processing
-    with state persisted after every file, exactly like local mode."""
-    from ..pipeline import PipelineResult, process_archive
-    from .state import advance_state, load_state, new_files, save_state
+    already-ingested archives cost zero bytes), then the same per-archive
+    loop as local mode (``pipeline.ingest_new``)."""
+    from ..pipeline import ingest_new
 
-    os.makedirs(warehouse_dir, exist_ok=True)
-    state_path = state_path or os.path.join(warehouse_dir, "_state")
-    staging_dir = staging_dir or os.path.join(warehouse_dir, "_staging")
     download_dir = download_dir or os.path.join(warehouse_dir, "_downloads")
 
-    state = load_state(spark, state_path)
-    candidates = discover_listing(fetch_listing(listing_url, http_get))
-    todo = new_files(candidates, state)
-    local_paths = download_archives(
-        listing_url, todo, download_dir, http_get, workers=workers, backoff=backoff
-    )
-    for cand in todo:
-        local_cand = CandidateFile(local_paths[cand.name], cand.year, cand.month)
-        process_archive(
-            spark,
-            local_cand,
-            staging_dir,
-            warehouse_dir,
-            top_k=top_k,
-            geometry_provider=geometry_provider,
+    def fetch(todo: list[CandidateFile]) -> list[CandidateFile]:
+        local = download_archives(
+            listing_url, todo, download_dir, http_get, workers=workers, backoff=backoff
         )
-        state = advance_state(state, cand)
-        save_state(spark, state, state_path)
-    return PipelineResult(processed=todo, skipped=len(candidates) - len(todo))
+        return [CandidateFile(local[c.name], c.year, c.month) for c in todo]
+
+    return ingest_new(
+        spark,
+        discover_listing(fetch_listing(listing_url, http_get)),
+        warehouse_dir,
+        state_path,
+        staging_dir,
+        top_k=top_k,
+        geometry_provider=geometry_provider,
+        fetch=fetch,
+    )

@@ -17,8 +17,9 @@ reprocesses it and so do we (ADVICE r1: the watermark variant silently
 dropped it).
 
 This is the batch analog of Structured Streaming's file-source seen-files
-log (SURVEY.md §2.10 I1). The state table is tiny (≤ years × 12 rows), so
-the diff is driver-side; persistence is a small Parquet table.
+log (SURVEY.md §2.10 I1). The state table is tiny (≤ years × 13 rows), so
+both the diff and the persistence are driver-side: one Parquet file read
+and written with pyarrow, with no Spark job.
 
 Reference bugs fixed, not replicated (SURVEY.md §7): the walrus-shadowing
 listcomp and the ``False``-instead-of-empty-list return
@@ -27,18 +28,21 @@ listcomp and the ``False``-instead-of-empty-list return
 
 from __future__ import annotations
 
+import os
+import shutil
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from .discovery import CandidateFile
 
-STATE_SCHEMA = T.StructType(
+# the column types Spark wrote for this table, so old warehouses still load
+STATE_SCHEMA = pa.schema(
     [
-        T.StructField("year", T.IntegerType(), False),
-        T.StructField("month", T.IntegerType(), True),
-        T.StructField("complete", T.BooleanType(), False),
+        pa.field("year", pa.int32(), nullable=False),
+        pa.field("month", pa.int32(), nullable=True),
+        pa.field("complete", pa.bool_(), nullable=False),
     ]
 )
 
@@ -53,33 +57,43 @@ class YearState:
     complete: bool = False
 
 
-def load_state(spark: SparkSession, path: str) -> dict[int, YearState]:
-    """S12-style existence probe + load: empty dict if the table doesn't
-    exist yet (spark.catalog.tableExists analog for a path table)."""
-    try:
-        rows = spark.read.schema(STATE_SCHEMA).parquet(path).collect()
-    except Exception:
+def load_state(path: str) -> dict[int, YearState]:
+    """Empty dict if the table doesn't exist yet; an unreadable table
+    raises, because treating it as empty would re-ingest every archive.
+    Files starting with ``_`` or ``.`` (Spark's ``_SUCCESS`` and CRCs)
+    are skipped."""
+    if not os.path.exists(path):
         return {}
+    rows = pq.read_table(path, columns=STATE_SCHEMA.names).to_pylist()
     state: dict[int, YearState] = {}
     for r in rows:
-        st = state.get(r.year, YearState(r.year))
-        if r.month is None:
+        st = state.get(r["year"], YearState(r["year"]))
+        if r["month"] is None:
             st = YearState(st.year, st.months, True)
         else:
-            st = YearState(st.year, st.months | {r.month}, st.complete)
-        state[r.year] = st
+            st = YearState(st.year, st.months | {r["month"]}, st.complete)
+        state[r["year"]] = st
     return state
 
 
-def save_state(spark: SparkSession, state: dict[int, YearState], path: str) -> None:
+def save_state(state: dict[int, YearState], path: str) -> None:
+    """Write the state to a temp dir and swap it into place."""
     rows = []
     for s in state.values():
-        rows.extend((s.year, m, False) for m in sorted(s.months))
+        rows.extend(
+            {"year": s.year, "month": m, "complete": False} for m in sorted(s.months)
+        )
         if s.complete:
-            rows.append((s.year, None, True))
-    spark.createDataFrame(rows, STATE_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
+            rows.append({"year": s.year, "month": None, "complete": True})
+    tmp = path + "__tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=STATE_SCHEMA),
+        os.path.join(tmp, "part-00000.parquet"),
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    os.replace(tmp, path)
 
 
 def new_files(

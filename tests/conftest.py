@@ -14,6 +14,14 @@ SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_ORACLE = "/root/testdata/sf0.001"  # parity tests run at the tiny sf
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "pipeline: the ingest pipeline's suite (sources, state, pipeline, "
+        "remote); run alone with `pytest -m pipeline tests/`",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark(app_name="citibike-tests", shuffle_partitions=8)

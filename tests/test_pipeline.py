@@ -9,25 +9,48 @@ import zipfile
 import duckdb
 import pytest
 
-from citibike_deep_dive_spark.pipeline import run_pipeline, read_table
+from citibike_deep_dive_spark import pipeline
+from citibike_deep_dive_spark.pipeline import DERIVED_TABLES, run_pipeline, read_table
 from citibike_deep_dive_spark.sources.export import (
     export_warehouse_to_duckdb,
     parse_bucket_listing_xml,
 )
+from citibike_deep_dive_spark.sources.state import load_state
 
 from tests.trips_fixture import legacy_era_pdf, modern_era_pdf
+
+pytestmark = pytest.mark.pipeline
+
+
+def _write_modern(d):
+    with zipfile.ZipFile(d / "202307-citibike-tripdata.csv.zip", "w") as z:
+        z.writestr("202307-citibike-tripdata.csv", modern_era_pdf().to_csv(index=False))
+        z.writestr("__MACOSX/._junk.csv", "garbage")
+
+
+def _write_legacy(d):
+    with zipfile.ZipFile(d / "2019-citibike-tripdata.zip", "w") as z:
+        z.writestr("2019-citibike-tripdata.csv", legacy_era_pdf().to_csv(index=False))
 
 
 @pytest.fixture()
 def inbox(tmp_path):
     d = tmp_path / "inbox"
     d.mkdir()
-    with zipfile.ZipFile(d / "202307-citibike-tripdata.csv.zip", "w") as z:
-        z.writestr("202307-citibike-tripdata.csv", modern_era_pdf().to_csv(index=False))
-        z.writestr("__MACOSX/._junk.csv", "garbage")
-    with zipfile.ZipFile(d / "2019-citibike-tripdata.zip", "w") as z:
-        z.writestr("2019-citibike-tripdata.csv", legacy_era_pdf().to_csv(index=False))
+    _write_modern(d)
+    _write_legacy(d)
     return str(d)
+
+
+def _snapshot(spark, wh):
+    """Every derived table and the state, as sorted JSON rows."""
+    out = {t: sorted(read_table(spark, wh, t).toJSON().collect()) for t in DERIVED_TABLES}
+    out["_state"] = sorted(spark.read.parquet(os.path.join(wh, "_state")).toJSON().collect())
+    return out
+
+
+def _persisted_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_pipeline_end_to_end_idempotent(spark, inbox, tmp_path):
@@ -46,6 +69,75 @@ def test_pipeline_end_to_end_idempotent(spark, inbox, tmp_path):
     assert len(r2.processed) == 0 and r2.skipped == 2
     for t, before in tables.items():
         assert sorted(repr(r) for r in read_table(spark, wh, t).collect()) == before
+
+
+def test_split_runs_equal_one_run(spark, inbox, tmp_path):
+    """One call over both archives and one call per archive leave the same
+    tables and state: the concurrent rewrites do not reorder the merges."""
+    together = str(tmp_path / "together")
+    assert len(run_pipeline(spark, inbox, together, top_k=5).processed) == 2
+
+    split_inbox = tmp_path / "split_inbox"
+    split_inbox.mkdir()
+    split = str(tmp_path / "split")
+    _write_legacy(split_inbox)
+    assert len(run_pipeline(spark, str(split_inbox), split, top_k=5).processed) == 1
+    _write_modern(split_inbox)
+    assert len(run_pipeline(spark, str(split_inbox), split, top_k=5).processed) == 1
+
+    assert _snapshot(spark, split) == _snapshot(spark, together)
+
+
+def test_failed_rewrite_reraises_and_keeps_state(spark, tmp_path, monkeypatch):
+    """A table rewrite that fails stops the run before the state advances,
+    after the other rewrites finished, with the trips cache released."""
+    d = tmp_path / "inbox"
+    d.mkdir()
+    _write_modern(d)
+    wh = str(tmp_path / "warehouse")
+
+    def broken(old, trips):
+        raise RuntimeError("heatmap build failed")
+
+    persisted = _persisted_rdds(spark)
+    monkeypatch.setattr(pipeline, "heatmap_update", broken)
+    with pytest.raises(RuntimeError, match="heatmap build failed"):
+        run_pipeline(spark, str(d), wh, top_k=5)
+    assert _persisted_rdds(spark) == persisted
+    assert load_state(os.path.join(wh, "_state")) == {}
+    # the other rewrites ran to the end before the error surfaced
+    assert [t for t in DERIVED_TABLES if read_table(spark, wh, t) is not None] == [
+        "linegraph", "dock", "trips"
+    ]
+
+    monkeypatch.undo()
+    assert len(run_pipeline(spark, str(d), wh, top_k=5).processed) == 1
+
+
+def test_table_writes_inherit_the_job_group(spark, inbox, tmp_path, monkeypatch):
+    """Jobs the rewrite threads launch belong to the caller's job group,
+    so it can cancel or attribute them."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    groups, write_jobs = [], set()
+    write_table = pipeline.write_table
+
+    def recording(df, wh, name):
+        groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+        before = set(tracker.getJobIdsForGroup("g"))
+        write_table(df, wh, name)
+        # the caller's thread launches nothing while the rewrites run
+        write_jobs.update(set(tracker.getJobIdsForGroup("g")) - before)
+
+    monkeypatch.setattr(pipeline, "write_table", recording)
+    sc.setJobGroup("g", "pipeline job-group test")
+    try:
+        r = run_pipeline(spark, inbox, str(tmp_path / "warehouse"), top_k=5)
+    finally:
+        sc._jsc.clearJobGroup()
+    n_writes = len(DERIVED_TABLES) * len(r.processed)
+    assert groups == ["g"] * n_writes
+    assert len(write_jobs) >= n_writes
 
 
 def test_duckdb_export_artifact(spark, inbox, tmp_path):

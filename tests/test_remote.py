@@ -19,6 +19,8 @@ from citibike_deep_dive_spark.sources.remote import (
 
 from tests.trips_fixture import modern_era_pdf
 
+pytestmark = pytest.mark.pipeline
+
 ZIP_KEY = "202307-citibike-tripdata.csv.zip"
 
 LISTING_XML = f"""<?xml version="1.0" encoding="UTF-8"?>

@@ -1,7 +1,10 @@
 from __future__ import annotations
 
 import io
+import os
 import zipfile
+
+import pytest
 
 from citibike_deep_dive_spark.sources.discovery import (
     CandidateFile,
@@ -18,6 +21,8 @@ from citibike_deep_dive_spark.sources.state import (
     save_state,
 )
 from citibike_deep_dive_spark.sources.zips import iter_csv_members
+
+pytestmark = pytest.mark.pipeline
 
 
 def test_parse_file_name():
@@ -84,15 +89,62 @@ def test_state_gate_out_of_order_month():
     assert new_files([late], state) == []
 
 
-def test_state_roundtrip(spark, tmp_path):
+def test_state_roundtrip(tmp_path):
     path = str(tmp_path / "status_state")
-    assert load_state(spark, path) == {}  # missing table -> empty, no crash
+    assert load_state(path) == {}  # missing table -> empty, no crash
     state = {
         2023: YearState(2023, frozenset({3, 7}), False),
         2022: YearState(2022, frozenset(), True),
     }
-    save_state(spark, state, path)
-    assert load_state(spark, path) == state
+    save_state(state, path)
+    assert load_state(path) == state
+    save_state({2024: YearState(2024, frozenset({1}), False)}, path)  # overwrite
+    assert load_state(path) == {2024: YearState(2024, frozenset({1}), False)}
+
+
+def test_load_state_raises_on_corrupt_table(tmp_path):
+    """Only a missing table means "nothing ingested yet": reading a corrupt
+    one as empty would re-ingest, and so double-count, every archive."""
+    path = str(tmp_path / "status_state")
+    save_state({2023: YearState(2023, frozenset({3}), False)}, path)
+    (part,) = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    with open(os.path.join(path, part), "r+b") as fh:
+        fh.truncate(os.path.getsize(os.path.join(path, part)) // 2)
+    with pytest.raises(Exception):
+        load_state(path)
+    assert load_state(str(tmp_path / "missing")) == {}
+
+
+def test_state_table_matches_the_spark_layout(spark, tmp_path):
+    """Warehouses written when Spark saved the state (its column types,
+    ``_SUCCESS`` and CRC files) still load; Spark reads the new table with
+    the same schema."""
+    from pyspark.sql import types as T
+
+    spark_schema = T.StructType(
+        [
+            T.StructField("year", T.IntegerType(), False),
+            T.StructField("month", T.IntegerType(), True),
+            T.StructField("complete", T.BooleanType(), False),
+        ]
+    )
+    old = str(tmp_path / "spark_state")
+    spark.createDataFrame(
+        [(2023, 3, False), (2022, None, True)], spark_schema
+    ).coalesce(1).write.parquet(old)
+    state = {
+        2023: YearState(2023, frozenset({3}), False),
+        2022: YearState(2022, frozenset(), True),
+    }
+    assert load_state(old) == state
+
+    new = str(tmp_path / "state")
+    save_state(state, new)
+    df = spark.read.parquet(new)
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in spark_schema
+    ]
+    assert sorted(df.collect()) == sorted(spark.read.parquet(old).collect())
 
 
 def _zip_bytes(members: dict[str, bytes]) -> bytes:
