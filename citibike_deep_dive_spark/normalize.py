@@ -11,10 +11,15 @@ ingestion stages (SURVEY.md §1.3, §2.2):
 Everything is native Column expressions: Catalyst pushes the P6 filters into
 the scan and the whole pipeline stays inside WholeStageCodegen — no Python
 row path, so it scales to the 100 TB fact table unchanged.
+
+The Column lists do not depend on the archive's rows, only on its header
+and ``file_year``, so each is built once per process by a ``functools.cache``
+builder keyed on exactly those inputs and applied per archive.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 
 from pyspark.sql import Column, DataFrame
@@ -64,6 +69,23 @@ def _parse_ts(col: Column) -> Column:
     return F.when(col.contains("/"), us).otherwise(iso)
 
 
+@functools.cache
+def _conform_columns(
+    columns: tuple[str, ...], string_cols: frozenset[str]
+) -> tuple[Column, ...]:
+    cols = []
+    for field in TRIP_SCHEMA.fields:
+        if field.name not in columns:
+            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
+        elif field.dataType.typeName() == "timestamp" and field.name in string_cols:
+            cols.append(_parse_ts(F.col(field.name)).alias(field.name))
+        else:
+            cols.append(
+                F.col(field.name).try_cast(field.dataType).alias(field.name)
+            )
+    return tuple(cols)
+
+
 def conform_schema(df: DataFrame) -> DataFrame:
     """P2+P3: null-pad missing canonical columns, project, cast to TRIP_SCHEMA.
 
@@ -71,22 +93,28 @@ def conform_schema(df: DataFrame) -> DataFrame:
     cast ABORTS THE JOB on the first malformed value — at 100 TB one
     garbage CSV cell must quarantine one row (NULL → dropped by the P6
     gate, pinned in tests/test_normalize.py), never kill the ingest."""
-    cols = []
-    for field in TRIP_SCHEMA.fields:
-        if field.name not in df.columns:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-        elif field.dataType.typeName() == "timestamp" and dict(df.dtypes)[field.name] == "string":
-            cols.append(_parse_ts(F.col(field.name)).alias(field.name))
-        else:
-            cols.append(
-                F.col(field.name).try_cast(field.dataType).alias(field.name)
-            )
-    return df.select(*cols)
+    dtypes = df.dtypes
+    return df.select(
+        *_conform_columns(
+            tuple(c for c, _ in dtypes),
+            frozenset(c for c, t in dtypes if t == "string"),
+        )
+    )
 
 
 def _in_bbox(lat: Column, lon: Column) -> Column:
     """NYC bounding-box membership (db_importing.py:49-50)."""
     return lat.between(NYC_LAT_MIN, NYC_LAT_MAX) & lon.between(NYC_LON_MIN, NYC_LON_MAX)
+
+
+@functools.cache
+def _repair_columns(side: str) -> dict[str, Column]:
+    lat, lon = f"{side}_station_latitude", f"{side}_station_longitude"
+    ok = _in_bbox(F.col(lat), F.col(lon))
+    return {
+        lat: F.when(ok, F.col(lat)).otherwise(F.col(lon)),
+        lon: F.when(ok, F.col(lon)).otherwise(F.col(lat)),
+    }
 
 
 def repair_coordinates(df: DataFrame) -> DataFrame:
@@ -98,25 +126,23 @@ def repair_coordinates(df: DataFrame) -> DataFrame:
     """
     out = df
     for side in ("start", "end"):
-        lat, lon = f"{side}_station_latitude", f"{side}_station_longitude"
-        ok = _in_bbox(F.col(lat), F.col(lon))
-        out = out.withColumns(
-            {
-                lat: F.when(ok, F.col(lat)).otherwise(F.col(lon)),
-                lon: F.when(ok, F.col(lon)).otherwise(F.col(lat)),
-            }
-        )
+        out = out.withColumns(_repair_columns(side))
     return out
+
+
+@functools.cache
+def _user_type_column() -> Column:
+    col = F.lower(F.col("user_type"))
+    expr = col
+    for src, dst in USER_TYPE_MAP.items():
+        expr = F.when(col == src, dst).otherwise(expr)
+    return expr
 
 
 def normalize_user_type(df: DataFrame) -> DataFrame:
     """F2+F3: lower() then member→subscriber / casual→customer CASE
     (db_importing.py:11-14,25-28,72)."""
-    col = F.lower(F.col("user_type"))
-    expr = col
-    for src, dst in USER_TYPE_MAP.items():
-        expr = F.when(col == src, dst).otherwise(expr)
-    return df.withColumn("user_type", expr)
+    return df.withColumn("user_type", _user_type_column())
 
 
 def month_abbrev(ts: Column) -> Column:
@@ -125,24 +151,21 @@ def month_abbrev(ts: Column) -> Column:
     return F.element_at(F.array(*[F.lit(m) for m in MONTH_ABBREV]), F.month(ts))
 
 
+@functools.cache
+def _partition_columns() -> dict[str, Column]:
+    return {
+        "year": F.date_format("start_time", "yyyy"),
+        "month": month_abbrev(F.col("start_time")),
+    }
+
+
 def add_partition_columns(df: DataFrame) -> DataFrame:
     """P5: derived string year + %b month (db_importing.py:74-75,106-108)."""
-    return df.withColumns(
-        {
-            "year": F.date_format("start_time", "yyyy"),
-            "month": month_abbrev(F.col("start_time")),
-        }
-    )
+    return df.withColumns(_partition_columns())
 
 
-def clean_filters(df: DataFrame, file_year: str | None = None) -> DataFrame:
-    """P6: multi-predicate load filter (db_importing.py:76-88), verbatim.
-
-    - non-empty START station name/id (the reference does not require the
-      end-side name/id to be non-empty), non-zero/non-null coordinates,
-    - neither station name in the depot/test blacklist,
-    - rows whose start year matches the file's year (when given).
-    """
+@functools.cache
+def _filter_condition(file_year: str | None) -> Column:
     cond = (
         (F.col("start_station_name") != "")
         & (F.col("start_station_id") != "")
@@ -157,7 +180,18 @@ def clean_filters(df: DataFrame, file_year: str | None = None) -> DataFrame:
     )
     if file_year is not None:
         cond = cond & (F.date_format("start_time", "yyyy") == file_year)
-    return df.filter(cond)
+    return cond
+
+
+def clean_filters(df: DataFrame, file_year: str | None = None) -> DataFrame:
+    """P6: multi-predicate load filter (db_importing.py:76-88), verbatim.
+
+    - non-empty START station name/id (the reference does not require the
+      end-side name/id to be non-empty), non-zero/non-null coordinates,
+    - neither station name in the depot/test blacklist,
+    - rows whose start year matches the file's year (when given).
+    """
+    return df.filter(_filter_condition(file_year))
 
 
 def normalize_trips(df: DataFrame, file_year: str | None = None) -> DataFrame:

@@ -20,6 +20,9 @@ Python in the executor hot path. JSON text exists only at export
 Determinism: ANY_VALUE becomes max() so DuckDB-oracle hashes are stable
 (SURVEY.md §4).
 
+The Column lists of the aggregate and merge depend only on ``extra_keys``,
+so ``functools.cache`` builders make each once per process.
+
 Scale notes: the whole pipeline is two shuffles — one hash aggregation to
 (station, year, month) grain (map-side combined), one re-agg to station
 grain. The deep merge joins on station_name only; the delta (one month of
@@ -29,8 +32,61 @@ reshuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+@functools.cache
+def _monthly_exprs(extra_keys: tuple[str, ...]):
+    """(sides select, filter, groupBy keys, aggregates, final select) of
+    dock_monthly."""
+
+    def _side(side: str, is_start: int):
+        return F.struct(
+            F.lit(is_start).alias("is_start"),
+            F.col(f"{side}_station_name").alias("station_name"),
+            F.col(f"{side}_station_id").alias("station_id"),
+            F.col(f"{side}_station_latitude").alias("station_latitude"),
+            F.col(f"{side}_station_longitude").alias("station_longitude"),
+        )
+
+    sides = (
+        *extra_keys,
+        "year",
+        "month",
+        F.explode(F.array(_side("start", 1), _side("end", 0))).alias("s"),
+    )
+    start = F.col("s.is_start") == 1
+
+    def _attr(name: str):
+        return F.coalesce(
+            F.max(F.when(start, F.col(f"s.{name}"))),
+            F.max(F.when(~start, F.col(f"s.{name}"))),
+        ).alias(name)
+
+    keys = (*extra_keys, F.col("s.station_name").alias("station_name"), "year", "month")
+    aggs = (
+        _attr("station_id"),
+        _attr("station_latitude"),
+        _attr("station_longitude"),
+        F.sum("s.is_start").cast("long").alias("month_starts"),
+        F.count("*").alias("month_total"),
+    )
+    out = (
+        *extra_keys,
+        "station_name",
+        "year",
+        "month",
+        "station_id",
+        "station_latitude",
+        "station_longitude",
+        "month_starts",
+        (F.col("month_total") - F.col("month_starts")).alias("month_ends"),
+        "month_total",
+    )
+    return sides, F.col("s.station_name").isNotNull(), keys, aggs, out
 
 
 def dock_monthly(trips: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
@@ -56,58 +112,19 @@ def dock_monthly(trips: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFram
     halves the input volume and removes the (station, year, month)
     shuffle join entirely.
     """
-
-    def _side(side: str, is_start: int):
-        return F.struct(
-            F.lit(is_start).alias("is_start"),
-            F.col(f"{side}_station_name").alias("station_name"),
-            F.col(f"{side}_station_id").alias("station_id"),
-            F.col(f"{side}_station_latitude").alias("station_latitude"),
-            F.col(f"{side}_station_longitude").alias("station_longitude"),
-        )
-
-    sides = trips.select(
-        *extra_keys,
-        "year",
-        "month",
-        F.explode(F.array(_side("start", 1), _side("end", 0))).alias("s"),
-    ).filter(F.col("s.station_name").isNotNull())
-
-    start = F.col("s.is_start") == 1
-
-    def _attr(name: str):
-        return F.coalesce(
-            F.max(F.when(start, F.col(f"s.{name}"))),
-            F.max(F.when(~start, F.col(f"s.{name}"))),
-        ).alias(name)
-
-    agg = sides.groupBy(
-        *extra_keys, F.col("s.station_name").alias("station_name"), "year", "month"
-    ).agg(
-        _attr("station_id"),
-        _attr("station_latitude"),
-        _attr("station_longitude"),
-        F.sum("s.is_start").cast("long").alias("month_starts"),
-        F.count("*").alias("month_total"),
-    )
-    return agg.select(
-        *extra_keys,
-        "station_name",
-        "year",
-        "month",
-        "station_id",
-        "station_latitude",
-        "station_longitude",
-        "month_starts",
-        (F.col("month_total") - F.col("month_starts")).alias("month_ends"),
-        "month_total",
+    sides, present, keys, aggs, out = _monthly_exprs(tuple(extra_keys))
+    return (
+        trips.select(*sides)
+        .filter(present)
+        .groupBy(*keys)
+        .agg(*aggs)
+        .select(*out)
     )
 
 
-def dock_yearly(monthly: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
-    """A5 + A6: month → year rollup; the months map replaces DuckDB's
-    json_group_object (update_dockmap.py:110-129)."""
-    return monthly.groupBy(*extra_keys, "station_name", "year").agg(
+@functools.cache
+def _yearly_aggs() -> tuple[Column, ...]:
+    return (
         F.max("station_id").alias("station_id"),
         F.max("station_latitude").alias("station_latitude"),
         F.max("station_longitude").alias("station_longitude"),
@@ -128,10 +145,14 @@ def dock_yearly(monthly: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFra
     )
 
 
-def dock_station(yearly: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
-    """A7 + X1: collect each station's year-objects into one map — the
-    reference's json_group_array + Python dict.update loop
-    (update_dockmap.py:146-196), as map_from_entries over sorted entries."""
+def dock_yearly(monthly: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
+    """A5 + A6: month → year rollup; the months map replaces DuckDB's
+    json_group_object (update_dockmap.py:110-129)."""
+    return monthly.groupBy(*extra_keys, "station_name", "year").agg(*_yearly_aggs())
+
+
+@functools.cache
+def _station_aggs() -> tuple[Column, ...]:
     # sort_array can't order structs containing maps (the months sub-map),
     # so sort with an explicit key comparator instead.
     entries = F.collect_list(
@@ -140,16 +161,19 @@ def dock_station(yearly: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFra
             F.struct("year_starts", "year_ends", "months").alias("value"),
         )
     )
-    by_key = F.array_sort(
-        entries,
-        lambda a, b: F.when(a.key < b.key, -1).when(a.key > b.key, 1).otherwise(0),
-    )
-    return yearly.groupBy(*extra_keys, "station_name").agg(
+    return (
         F.max("station_id").alias("station_id"),
         F.max("station_latitude").alias("station_latitude"),
         F.max("station_longitude").alias("station_longitude"),
-        F.map_from_entries(by_key).alias("station_data"),
+        F.map_from_entries(_sort_entries_by_key(entries)).alias("station_data"),
     )
+
+
+def dock_station(yearly: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
+    """A7 + X1: collect each station's year-objects into one map — the
+    reference's json_group_array + Python dict.update loop
+    (update_dockmap.py:146-196), as map_from_entries over sorted entries."""
+    return yearly.groupBy(*extra_keys, "station_name").agg(*_station_aggs())
 
 
 def dock_aggregate(trips: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
@@ -187,6 +211,23 @@ def _merged_station_data(e_data, d_data):
     )
 
 
+@functools.cache
+def _merge_select() -> tuple[Column, ...]:
+    return (
+        F.col("station_name"),
+        F.coalesce(F.col("d.station_id"), F.col("e.station_id")).alias("station_id"),
+        F.coalesce(F.col("d.station_latitude"), F.col("e.station_latitude")).alias(
+            "station_latitude"
+        ),
+        F.coalesce(F.col("d.station_longitude"), F.col("e.station_longitude")).alias(
+            "station_longitude"
+        ),
+        _merged_station_data(
+            F.col("e.station_data"), F.col("d.station_data")
+        ).alias("station_data"),
+    )
+
+
 def dock_merge(existing: DataFrame | None, delta: DataFrame) -> DataFrame:
     """X2 deep merge (update_dockmap.py:214-251) + J3 anti-insert + J6
     update, as ONE full-outer join:
@@ -201,19 +242,7 @@ def dock_merge(existing: DataFrame | None, delta: DataFrame) -> DataFrame:
     joined = existing.alias("e").join(
         F.broadcast(delta).alias("d"), "station_name", "full_outer"
     )
-    return joined.select(
-        "station_name",
-        F.coalesce(F.col("d.station_id"), F.col("e.station_id")).alias("station_id"),
-        F.coalesce(F.col("d.station_latitude"), F.col("e.station_latitude")).alias(
-            "station_latitude"
-        ),
-        F.coalesce(F.col("d.station_longitude"), F.col("e.station_longitude")).alias(
-            "station_longitude"
-        ),
-        _merged_station_data(
-            F.col("e.station_data"), F.col("d.station_data")
-        ).alias("station_data"),
-    )
+    return joined.select(*_merge_select())
 
 
 def dock_merge_tagged(

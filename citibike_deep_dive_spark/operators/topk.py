@@ -30,7 +30,10 @@ def top_k_per_group(
 ) -> DataFrame:
     """Keep the top ``k`` rows of each group under a deterministic order."""
     w = Window.partitionBy(*group_by).orderBy(*order_by)
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-    )
+    return top_k_by_rank(df, F.row_number().over(w), k, rank_col)
+
+
+def top_k_by_rank(df: DataFrame, rank: Column, k: int, rank_col: str = "rn") -> DataFrame:
+    """``top_k_per_group`` with the ranking Column built by the caller, so
+    a caller that ranks the same way every time can build it once."""
+    return df.withColumn(rank_col, rank).filter(F.col(rank_col) <= k)

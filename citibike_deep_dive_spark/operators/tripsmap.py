@@ -18,22 +18,27 @@ Mapbox HTTP call is a pluggable provider so correctness never needs
 network; retries/batching live inside the UDF batch, replacing the
 reference's ThreadPoolExecutor (:101-106).
 
+The self-loop filter, aggregates, top-k ranking and native waypoints
+column do not depend on the archive, so each is built once per process
+(``functools.cache``).
+
 Scale: enrichment runs strictly AFTER the top-30-per-year gate (cost
 gating preserved, :94), so the pandas path only ever sees ~30×years rows.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 from collections.abc import Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .topk import top_k_per_group
+from .topk import top_k_by_rank
 from .upsert import additive_upsert
 
 GROUP_COLS = [
@@ -57,14 +62,28 @@ WAYPOINTS_TYPE = T.ArrayType(
 )
 
 
+@functools.cache
+def _aggregate_exprs() -> tuple[Column, tuple[Column, ...]]:
+    return (
+        F.col("start_station_name") != F.col("end_station_name"),
+        (F.count("*").alias("trip_count"), F.min("start_time").alias("trip_time")),
+    )
+
+
 def trip_aggregate(trips: DataFrame) -> DataFrame:
     """P7 + A8: non-self-loop trips grouped to route grain."""
-    return (
-        trips.filter(F.col("start_station_name") != F.col("end_station_name"))
-        .groupBy(*GROUP_COLS)
-        .agg(
-            F.count("*").alias("trip_count"),
-            F.min("start_time").alias("trip_time"),
+    not_loop, aggs = _aggregate_exprs()
+    return trips.filter(not_loop).groupBy(*GROUP_COLS).agg(*aggs)
+
+
+@functools.cache
+def _top_trips_rank() -> Column:
+    return F.row_number().over(
+        Window.partitionBy("year").orderBy(
+            F.col("trip_count").desc(),
+            F.col("start_station_name"),
+            F.col("end_station_name"),
+            F.col("rideable_type"),
         )
     )
 
@@ -72,17 +91,7 @@ def trip_aggregate(trips: DataFrame) -> DataFrame:
 def top_trips(aggregated: DataFrame, k: int = 30) -> DataFrame:
     """W1: top-k routes per year by trip_count, with deterministic
     tiebreaks (the reference has none — SURVEY.md §4)."""
-    return top_k_per_group(
-        aggregated,
-        group_by=["year"],
-        order_by=[
-            F.col("trip_count").desc(),
-            F.col("start_station_name"),
-            F.col("end_station_name"),
-            F.col("rideable_type"),
-        ],
-        k=k,
-    )
+    return top_k_by_rank(aggregated, _top_trips_rank(), k)
 
 
 def haversine_km(lat1: float, lon1: float, lat2: float, lon2: float) -> float:
@@ -183,6 +192,11 @@ def enrich_routes_native(top: DataFrame) -> DataFrame:
     grid: F.round is HALF_UP while Python's round is HALF_EVEN, which
     differs only on exact half-way ties at the 6th decimal.
     """
+    return top.withColumn("waypoints", _native_waypoints())
+
+
+@functools.cache
+def _native_waypoints() -> Column:
     lat1, lon1 = F.col("start_station_latitude"), F.col("start_station_longitude")
     lat2, lon2 = F.col("end_station_latitude"), F.col("end_station_longitude")
 
@@ -227,7 +241,7 @@ def enrich_routes_native(top: DataFrame) -> DataFrame:
             c.alias("coordinates"),
         ),
     )
-    return top.withColumn("waypoints", waypoints.cast(WAYPOINTS_TYPE))
+    return waypoints.cast(WAYPOINTS_TYPE)
 
 
 def enrich_routes(

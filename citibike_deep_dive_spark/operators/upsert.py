@@ -14,15 +14,41 @@ Scale notes:
   merge then never shuffles the main table.
 - With a lakehouse format (Delta/Iceberg) this same function's plan maps
   to MERGE INTO; on plain Parquet the caller rewrites the table
-  (write temp dir + swap) — see ``overwrite_table``.
+  (write temp dir + swap).
+- The select list is built once per (columns, keys, counters,
+  delta_wins) and reused; the join itself is rebuilt per call.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+@functools.cache
+def _upsert_select(
+    columns: tuple[str, ...],
+    keys: tuple[str, ...],
+    counters: tuple[str, ...],
+    delta_wins: bool,
+) -> tuple[Column, ...]:
+    others = [c for c in columns if c not in keys and c not in counters]
+    first, second = ("d", "m") if delta_wins else ("m", "d")
+    cols = [F.col(k) for k in keys]
+    cols += [
+        (
+            F.coalesce(F.col(f"m.{c}"), F.lit(0)) + F.coalesce(F.col(f"d.{c}"), F.lit(0))
+        ).alias(c)
+        for c in counters
+    ]
+    cols += [
+        F.coalesce(F.col(f"{first}.{c}"), F.col(f"{second}.{c}")).alias(c)
+        for c in others
+    ]
+    return tuple(cols)
 
 
 def additive_upsert(
@@ -45,20 +71,9 @@ def additive_upsert(
     """
     d = F.broadcast(delta) if broadcast_delta else delta
     joined = main.alias("m").join(d.alias("d"), list(keys), "full_outer")
-    others = [c for c in main.columns if c not in keys and c not in counters]
-    first, second = ("d", "m") if delta_wins else ("m", "d")
-    cols = [F.col(k) for k in keys]
-    cols += [
-        (
-            F.coalesce(F.col(f"m.{c}"), F.lit(0)) + F.coalesce(F.col(f"d.{c}"), F.lit(0))
-        ).alias(c)
-        for c in counters
-    ]
-    cols += [
-        F.coalesce(F.col(f"{first}.{c}"), F.col(f"{second}.{c}")).alias(c)
-        for c in others
-    ]
-    return joined.select(*cols)
+    return joined.select(
+        *_upsert_select(tuple(main.columns), tuple(keys), tuple(counters), delta_wins)
+    )
 
 
 def anti_insert(
@@ -71,13 +86,3 @@ def anti_insert(
     with null keys pre-filtered the two coincide with a left-anti join.
     """
     return candidates.join(F.broadcast(main.select(*keys)), list(keys), "left_anti")
-
-
-def overwrite_table(df: DataFrame, path: str, partition_by: Sequence[str] = ()) -> None:
-    """Atomic-ish table rewrite: the plain-Parquet stand-in for DuckDB's
-    in-place UPDATE (SURVEY.md §7 hard parts). Spark's overwrite mode
-    stages to a temporary location then commits via rename."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

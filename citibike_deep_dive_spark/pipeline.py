@@ -16,19 +16,27 @@ Differences from the reference, by design (SURVEY.md §7):
   thread each (none reads another's output), so Spark schedules their
   jobs side by side; the state is saved only once all four succeeded;
 - the state table is read and written on the driver with pyarrow;
+- a table is read with the Spark schema stored in its Parquet footer, so
+  reading it plans without a schema-inference job;
+- each archive is extracted into its own staging subdirectory, which is
+  removed when the archive is done, whether it succeeded or failed;
 - route enrichment uses the injectable geometry provider (offline
   deterministic by default — no network in the data path).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import tempfile
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
 from .normalize import normalize_trips
@@ -48,6 +56,9 @@ from .sources.zips import extract_to_staging, read_staged_csvs
 
 DERIVED_TABLES = ("linegraph", "heatmap", "dock", "trips")
 
+# Footer key under which Spark's Parquet writer stores the row schema.
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 @dataclass
 class PipelineResult:
@@ -60,10 +71,15 @@ def _table_path(warehouse_dir: str, name: str) -> str:
 
 
 def read_table(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame | None:
+    """The table as Spark wrote it, or None if it does not exist. The
+    schema comes from one part file's footer, so no inference job runs."""
     path = _table_path(warehouse_dir, name)
     if not os.path.exists(path):
         return None
-    return spark.read.parquet(path)
+    part = min(f for f in os.listdir(path) if f.endswith(".parquet"))
+    meta = pq.read_schema(os.path.join(path, part)).metadata
+    schema = StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+    return spark.read.schema(schema).parquet(path)
 
 
 def write_table(df: DataFrame, warehouse_dir: str, name: str) -> None:
@@ -87,39 +103,41 @@ def process_archive(
     """Ingest one archive and merge it into all derived tables (the body
     of the reference's per-file loop, main.py:62-76).
 
-    The normalized trips are cached by one action, then each table's
-    read → build → write chain runs in its own thread. Every thread
+    The archive is extracted into its own staging subdirectory, removed
+    at the end. The normalized trips are cached by one action, then each
+    table's read → build → write chain runs in its own thread. Every thread
     inherits the caller's local properties (job group, scheduler pool).
     The first failure is re-raised once all four threads have finished."""
-    paths = extract_to_staging(cand.name, staging_dir)
-    raw = read_staged_csvs(spark, paths)
-    trips = normalize_trips(raw, file_year=str(cand.year)).cache()
-    builders: dict[str, Callable[[DataFrame | None], DataFrame]] = {
-        "linegraph": lambda old: linegraph_update(old, trips),
-        "heatmap": lambda old: heatmap_update(old, trips),
-        "dock": lambda old: dock_merge(old, dock_aggregate(trips)),
-        "trips": lambda old: tripsmap_update(
-            old,
-            enrich_routes(top_trips(trip_aggregate(trips), k=top_k), geometry_provider),
-        ),
-    }
+    prefix = os.path.basename(cand.name) + "."
+    with tempfile.TemporaryDirectory(prefix=prefix, dir=staging_dir) as stage:
+        raw = read_staged_csvs(spark, extract_to_staging(cand.name, stage))
+        trips = normalize_trips(raw, file_year=str(cand.year)).cache()
+        builders: dict[str, Callable[[DataFrame | None], DataFrame]] = {
+            "linegraph": lambda old: linegraph_update(old, trips),
+            "heatmap": lambda old: heatmap_update(old, trips),
+            "dock": lambda old: dock_merge(old, dock_aggregate(trips)),
+            "trips": lambda old: tripsmap_update(
+                old,
+                enrich_routes(top_trips(trip_aggregate(trips), k=top_k), geometry_provider),
+            ),
+        }
 
-    def rewrite(name: str) -> None:
-        old = read_table(spark, warehouse_dir, name)
-        write_table(builders[name](old), warehouse_dir, name)
+        def rewrite(name: str) -> None:
+            old = read_table(spark, warehouse_dir, name)
+            write_table(builders[name](old), warehouse_dir, name)
 
-    try:
-        trips.count()
-        with ThreadPoolExecutor(max_workers=len(DERIVED_TABLES)) as pool:
-            # wrap once per thread: each gets its own copy of the properties
-            futures = [
-                pool.submit(inheritable_thread_target(spark)(rewrite), name)
-                for name in DERIVED_TABLES
-            ]
-            for f in futures:
-                f.result()
-    finally:
-        trips.unpersist()
+        try:
+            trips.count()
+            with ThreadPoolExecutor(max_workers=len(DERIVED_TABLES)) as pool:
+                # wrap once per thread: each gets its own copy of the properties
+                futures = [
+                    pool.submit(inheritable_thread_target(spark)(rewrite), name)
+                    for name in DERIVED_TABLES
+                ]
+                for f in futures:
+                    f.result()
+        finally:
+            trips.unpersist()
 
 
 def ingest_new(

@@ -59,13 +59,15 @@ def iter_csv_members(data: bytes, _depth: int = 0) -> Iterator[tuple[str, bytes]
 
 def extract_to_staging(zip_path: str, staging_dir: str) -> list[str]:
     """S4 path 1: driver-side extraction of one archive into a staging
-    directory; returns written CSV paths for ``spark.read.csv``."""
+    directory; returns written CSV paths for ``spark.read.csv``. Members
+    are numbered in archive order, since members in different folders
+    (or nested zips) may share a basename."""
     os.makedirs(staging_dir, exist_ok=True)
     out = []
     with open(zip_path, "rb") as fh:
         data = fh.read()
-    for name, payload in iter_csv_members(data):
-        dest = os.path.join(staging_dir, os.path.basename(name))
+    for i, (name, payload) in enumerate(iter_csv_members(data)):
+        dest = os.path.join(staging_dir, f"{i:04d}-{os.path.basename(name)}")
         with open(dest, "wb") as fh:
             fh.write(payload)
         out.append(dest)

@@ -140,6 +140,14 @@ def test_table_writes_inherit_the_job_group(spark, inbox, tmp_path, monkeypatch)
     assert len(write_jobs) >= n_writes
 
 
+def test_run_leaves_no_staged_csv(spark, inbox, tmp_path):
+    """Each archive's extracted CSVs are removed once it is merged."""
+    wh = tmp_path / "warehouse"
+    assert len(run_pipeline(spark, inbox, str(wh), top_k=5).processed) == 2
+    staged = [f for _, _, files in os.walk(wh / "_staging") for f in files]
+    assert not [f for f in staged if f.lower().endswith(".csv")]
+
+
 def test_duckdb_export_artifact(spark, inbox, tmp_path):
     wh = str(tmp_path / "warehouse")
     run_pipeline(spark, inbox, wh, top_k=5)

@@ -210,3 +210,18 @@ def test_distributed_zip_to_trips_end_to_end(spark, tmp_path):
     d = sorted(repr(r) for r in distributed.collect())
     s = sorted(repr(r) for r in via_staging.collect())
     assert d == s and len(d) > 0
+
+
+def test_staged_members_sharing_a_basename_stay_apart(spark, tmp_path):
+    """Members in different folders with one basename are staged as two
+    files, so each month's rows are read exactly once."""
+    from citibike_deep_dive_spark.sources.zips import extract_to_staging, read_staged_csvs
+
+    zpath = tmp_path / "2023-citibike-tripdata.zip"
+    with zipfile.ZipFile(zpath, "w") as z:
+        z.writestr("jan/trips.csv", "ride\n1\n3\n")
+        z.writestr("feb/trips.csv", "ride\n5\n")
+    staged = extract_to_staging(str(zpath), str(tmp_path / "staging"))
+    assert len(set(staged)) == 2
+    rows = read_staged_csvs(spark, staged).collect()
+    assert sorted(r.ride for r in rows) == ["1", "3", "5"]
