@@ -245,69 +245,6 @@ def dock_merge(existing: DataFrame | None, delta: DataFrame) -> DataFrame:
     return joined.select(*_merge_select())
 
 
-def dock_merge_tagged(
-    yearly: DataFrame,
-    side_col: str = "side",
-    existing_tag: str = "e",
-    delta_tag: str = "d",
-) -> DataFrame:
-    """dock_station + dock_merge in ONE aggregation, for the fused
-    single-scan form where existing and delta are one ``side``-tagged
-    pipeline (see dock_deep_merge_nested_maps).
-
-    ``yearly`` is dock_yearly output with the side tag still in the key.
-    Grouping by station alone and building each side's station_data from
-    side-filtered collect_lists replaces {second station-grain shuffle per
-    side + full-outer join} with a single station-grain shuffle — and
-    join-free merge means no join-key skew to manage at 100 TB.
-    Semantics identical to ``dock_merge(dock_station(e), dock_station(d))``:
-    collect_list drops the other side's NULLed entries, an absent side
-    yields an empty entry array which maps back to NULL so the pass-through
-    branches fire, and attrs keep new-wins-then-existing precedence.
-    """
-    e = F.col(side_col) == existing_tag
-    d = F.col(side_col) == delta_tag
-
-    def _side_data(cond):
-        entries = _sort_entries_by_key(
-            F.collect_list(
-                F.when(
-                    cond,
-                    F.struct(
-                        F.col("year").alias("key"),
-                        F.struct("year_starts", "year_ends", "months").alias("value"),
-                    ),
-                )
-            )
-        )
-        return F.when(F.size(entries) > 0, F.map_from_entries(entries))
-
-    def _side_attr(name, cond):
-        return F.max(F.when(cond, F.col(name)))
-
-    agg = yearly.groupBy("station_name").agg(
-        _side_attr("station_id", e).alias("e_station_id"),
-        _side_attr("station_latitude", e).alias("e_station_latitude"),
-        _side_attr("station_longitude", e).alias("e_station_longitude"),
-        _side_attr("station_id", d).alias("d_station_id"),
-        _side_attr("station_latitude", d).alias("d_station_latitude"),
-        _side_attr("station_longitude", d).alias("d_station_longitude"),
-        _side_data(e).alias("e_data"),
-        _side_data(d).alias("d_data"),
-    )
-    return agg.select(
-        "station_name",
-        F.coalesce("d_station_id", "e_station_id").alias("station_id"),
-        F.coalesce("d_station_latitude", "e_station_latitude").alias(
-            "station_latitude"
-        ),
-        F.coalesce("d_station_longitude", "e_station_longitude").alias(
-            "station_longitude"
-        ),
-        _merged_station_data(F.col("e_data"), F.col("d_data")).alias("station_data"),
-    )
-
-
 def dock_merge_fused_json(
     trips: DataFrame,
     existing_cond,
@@ -316,7 +253,7 @@ def dock_merge_fused_json(
     """X1 + X2 deep merge, fused and flattened: ONE scan, TWO shuffles,
     zero joins, zero interpreted higher-order functions.
 
-    The MapType forms (dock_merge / dock_merge_tagged) build both sides'
+    The MapType form (dock_merge) builds both sides'
     nested station_data maps and then deep-merge them with map_zip_with —
     semantically direct, but map construction + lambda-comparator sorts
     run interpreted (outside whole-stage codegen) and the merge happens
@@ -340,9 +277,10 @@ def dock_merge_fused_json(
     clustered distribution. At 100 TB nothing after shuffle 2 moves data.
 
     ``existing_cond``/``delta_cond`` must be disjoint boolean Columns.
-    Output schema and values are identical to
-    ``dock_export_json(dock_merge(existing, delta), canonical=True)`` —
-    pinned by tests/test_dockmap equivalence.
+    Output values are identical to ``dock_merge(existing, delta)`` with
+    station_data serialized as ``to_json(canonical_station_data(...))`` —
+    pinned by tests/test_operators.py
+    ::test_dock_merge_fused_json_equals_two_pipeline.
     """
     tagged = trips.withColumn(
         "side", F.when(delta_cond, "d").when(existing_cond, "e")
@@ -450,10 +388,3 @@ def canonical_station_data(col):
         ),
     )
     return F.map_from_entries(_sort_entries_by_key(entries))
-
-
-def dock_export_json(dock: DataFrame, canonical: bool = False) -> DataFrame:
-    """Edge serialization: nested MapType → JSON text, only at the sink
-    (parity with the reference's stored JSON column, table_list.py:42)."""
-    col = canonical_station_data(F.col("station_data")) if canonical else F.col("station_data")
-    return dock.withColumn("station_data", F.to_json(col))

@@ -74,15 +74,3 @@ def additive_upsert(
     return joined.select(
         *_upsert_select(tuple(main.columns), tuple(keys), tuple(counters), delta_wins)
     )
-
-
-def anti_insert(
-    main: DataFrame, candidates: DataFrame, keys: Sequence[str]
-) -> DataFrame:
-    """Rows of ``candidates`` whose keys are absent from ``main`` (J2/J3).
-
-    The reference spells this both as LEFT JOIN … WHERE right IS NULL
-    (update_heatmap.py:26-35) and as NOT IN (update_dockmap.py:253-258);
-    with null keys pre-filtered the two coincide with a left-anti join.
-    """
-    return candidates.join(F.broadcast(main.select(*keys)), list(keys), "left_anti")

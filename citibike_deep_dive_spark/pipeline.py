@@ -10,6 +10,14 @@ terminal artifact) and upload it to S3.
 
 Differences from the reference, by design (SURVEY.md §7):
 - tables are Parquet dirs updated by atomic rewrite, not in-place UPDATEs;
+- a merged table is collected to the Spark driver as Arrow and written as
+  one ``part-00000.parquet`` by pyarrow, in Spark's layout (INT96 timestamps,
+  Spark's row-schema and version footer keys), so no Spark write job or
+  file commit runs. The four tables are driver-sized by construction:
+  their rows are bounded by stations × months and top-k routes, not by
+  trips, and the DuckDB export already loads each of them whole on the
+  driver. Everything that grows with trips (the CSV scan, normalize and
+  the four delta aggregations) stays on Spark;
 - archives are processed one at a time, in order, and the state is saved
   after each, so the StatusData gate stays correct across partial runs;
 - within an archive the four table rewrites run concurrently, one driver
@@ -20,12 +28,16 @@ Differences from the reference, by design (SURVEY.md §7):
   reading it plans without a schema-inference job;
 - each archive is extracted into its own staging subdirectory, which is
   removed when the archive is done, whether it succeeded or failed;
+- an archive's CSV members are read and normalized per distinct header,
+  then unioned by name, so a yearly archive that spans the 2021 format
+  change keeps both eras' rows;
 - route enrichment uses the injectable geometry provider (offline
   deterministic by default — no network in the data path).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -52,12 +64,13 @@ from .operators.tripsmap import (
 )
 from .sources.discovery import CandidateFile, discover_local
 from .sources.state import advance_state, load_state, new_files, save_state
-from .sources.zips import extract_to_staging, read_staged_csvs
+from .sources.zips import extract_to_staging, group_by_header, read_staged_csvs
 
 DERIVED_TABLES = ("linegraph", "heatmap", "dock", "trips")
 
-# Footer key under which Spark's Parquet writer stores the row schema.
+# Footer keys Spark's Parquet writer stores: the row schema and its version.
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+SPARK_VERSION_KEY = b"org.apache.spark.version"
 
 
 @dataclass
@@ -71,8 +84,8 @@ def _table_path(warehouse_dir: str, name: str) -> str:
 
 
 def read_table(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame | None:
-    """The table as Spark wrote it, or None if it does not exist. The
-    schema comes from one part file's footer, so no inference job runs."""
+    """The table, or None if it does not exist. The schema comes from one
+    part file's footer, so no inference job runs."""
     path = _table_path(warehouse_dir, name)
     if not os.path.exists(path):
         return None
@@ -84,10 +97,23 @@ def read_table(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame 
 
 def write_table(df: DataFrame, warehouse_dir: str, name: str) -> None:
     """Atomic-ish rewrite: write to a temp dir, swap into place (the
-    plain-Parquet stand-in for DuckDB's transactional UPDATE)."""
+    plain-Parquet stand-in for DuckDB's transactional UPDATE).
+
+    ``df`` is collected as Arrow and written as one part file with the
+    physical layout and footer keys Spark's writer gives it, so Spark and
+    DuckDB read it as before."""
     final = _table_path(warehouse_dir, name)
     tmp = final + "__tmp"
-    df.write.mode("overwrite").parquet(tmp)
+    table = df.toArrow().replace_schema_metadata(
+        {SPARK_SCHEMA_KEY: df.schema.json(), SPARK_VERSION_KEY: df.sparkSession.version}
+    )
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    pq.write_table(
+        table,
+        os.path.join(tmp, "part-00000.parquet"),
+        use_deprecated_int96_timestamps=True,  # Spark's default timestamp type
+    )
     shutil.rmtree(final, ignore_errors=True)
     os.replace(tmp, final)
 
@@ -104,14 +130,23 @@ def process_archive(
     of the reference's per-file loop, main.py:62-76).
 
     The archive is extracted into its own staging subdirectory, removed
-    at the end. The normalized trips are cached by one action, then each
-    table's read → build → write chain runs in its own thread. Every thread
-    inherits the caller's local properties (job group, scheduler pool).
-    The first failure is re-raised once all four threads have finished."""
+    at the end. Members are read and normalized per header, and the union
+    is cached by one ``noop`` write job; then each table's read → build →
+    write chain runs in its own thread. Every thread inherits the caller's
+    local properties (job group, scheduler pool). The first failure is
+    re-raised once all four threads have finished."""
     prefix = os.path.basename(cand.name) + "."
     with tempfile.TemporaryDirectory(prefix=prefix, dir=staging_dir) as stage:
-        raw = read_staged_csvs(spark, extract_to_staging(cand.name, stage))
-        trips = normalize_trips(raw, file_year=str(cand.year)).cache()
+        groups = group_by_header(extract_to_staging(cand.name, stage))
+        if not groups:
+            raise ValueError(f"{cand.name} holds no CSV member with a header")
+        trips = functools.reduce(
+            DataFrame.unionByName,
+            [
+                normalize_trips(read_staged_csvs(spark, paths), file_year=str(cand.year))
+                for paths in groups
+            ],
+        ).cache()
         builders: dict[str, Callable[[DataFrame | None], DataFrame]] = {
             "linegraph": lambda old: linegraph_update(old, trips),
             "heatmap": lambda old: heatmap_update(old, trips),
@@ -127,7 +162,7 @@ def process_archive(
             write_table(builders[name](old), warehouse_dir, name)
 
         try:
-            trips.count()
+            trips.write.format("noop").mode("overwrite").save()
             with ThreadPoolExecutor(max_workers=len(DERIVED_TABLES)) as pool:
                 # wrap once per thread: each gets its own copy of the properties
                 futures = [

@@ -7,10 +7,8 @@ thousand file names — so it stays plain Python here too; everything after
 (extraction, parsing, aggregation) is cluster-side.
 
 Reference bugs fixed, not replicated (SURVEY.md §7):
-- parser.py defines parse_file_date twice (:20-27 shadowed by :37-43) with
-  inconsistent no-match returns — one definition here, always (None, None).
 - create_table_name crashed with AttributeError on non-matching names
-  (:5-6); here it returns None.
+  (:5-6); here parse_file_name returns None.
 """
 
 from __future__ import annotations
@@ -20,7 +18,6 @@ import re
 from dataclasses import dataclass
 
 FILE_RE = re.compile(r"^(\d{4})(\d{2})?-citibike-tripdata(\.csv)?\.zip$")
-TABLE_RE = re.compile(r"^Citibike_(\d{4})(?:_(\d{2}))?$")
 MIN_YEAR = 2013
 
 
@@ -55,15 +52,6 @@ def parse_file_name(name: str) -> tuple[int, int | None] | None:
     year = int(m.group(1))
     month = int(m.group(2)) if m.group(2) else None
     return year, month
-
-
-def parse_table_name(name: str) -> tuple[int | None, int | None]:
-    """F8: ``Citibike_YYYY[_MM]`` → (year, month); (None, None) on no
-    match (single definition — the reference had two conflicting ones)."""
-    m = TABLE_RE.match(name)
-    if not m:
-        return None, None
-    return int(m.group(1)), int(m.group(2)) if m.group(2) else None
 
 
 def is_candidate(name: str) -> bool:

@@ -8,9 +8,11 @@ parse + concat (:10-25).
 Two Spark-first paths:
 
 1. ``extract_to_staging`` (default): driver-side unzip to a staging dir,
-   then ONE ``spark.read.csv(staging_glob)`` — the cluster parses CSVs in
-   parallel with full pushdown. Right for the reference's actual scale
-   (one archive at a time, each holding a handful of CSVs).
+   then one ``spark.read.csv`` per distinct header (``group_by_header``),
+   with the header, read by Python's ``csv`` module, as the schema, so no
+   inference job runs — the cluster parses CSVs in parallel with full
+   pushdown. Right for the reference's actual scale (one archive at a
+   time, each holding a handful of CSVs).
 
 2. ``read_zips_distributed``: ``binaryFile`` source + ``mapInPandas``
    doing in-executor zipfile extraction — for the 100 TB case where
@@ -21,6 +23,7 @@ Two Spark-first paths:
 
 from __future__ import annotations
 
+import csv
 import io
 import os
 import zipfile
@@ -74,11 +77,45 @@ def extract_to_staging(zip_path: str, staging_dir: str) -> list[str]:
     return out
 
 
+def csv_header(path: str) -> tuple[str, ...]:
+    """The column names ``spark.read.csv(header=True)`` gives this file,
+    read from its first line with Python's ``csv`` module: an empty name
+    becomes ``_c<i>``, and a name that repeats (case-insensitively, Spark's
+    default) gets its index appended. An empty file has no columns."""
+    with open(path, newline="", encoding="utf-8-sig") as fh:
+        row = next(csv.reader(fh), [])
+    folded = [name.lower() for name in row if name]
+    repeated = {name for name in folded if folded.count(name) > 1}
+    return tuple(
+        f"_c{i}" if not name else f"{name}{i}" if name.lower() in repeated else name
+        for i, name in enumerate(row)
+    )
+
+
+def group_by_header(paths: list[str]) -> list[list[str]]:
+    """Staged members grouped by header, in order of first appearance. A
+    yearly archive that spans the February 2021 format change holds
+    members of both eras; each group is read with its own header (the
+    reference parses every member on its own, SURVEY.md S5/S6). Empty
+    members hold no rows and are left out."""
+    groups: dict[tuple[str, ...], list[str]] = {}
+    for path in paths:
+        header = csv_header(path)
+        if header:
+            groups.setdefault(header, []).append(path)
+    return list(groups.values())
+
+
 def read_staged_csvs(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """S5/S6: one multi-path CSV read — header inference per the
-    reference's Arrow read_csv; schema conformance happens downstream in
-    normalize_trips (timestamps parsed there via try_to_timestamp)."""
-    return spark.read.csv(paths, header=True, inferSchema=False)
+    """S5/S6: one multi-path CSV read of members that share one header.
+    The header, read in Python, is passed as an all-string schema, so
+    Spark launches no inference job; schema conformance happens downstream
+    in normalize_trips (timestamps parsed there via try_to_timestamp)."""
+    headers = {csv_header(p) for p in paths}
+    if len(headers) != 1:
+        raise ValueError(f"expected members with one header, got {len(headers)} headers")
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in headers.pop()])
+    return spark.read.csv(paths, header=True, schema=schema)
 
 
 CSV_LINES_SCHEMA = T.StructType(
@@ -108,33 +145,3 @@ def read_zips_distributed(spark: SparkSession, glob: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["archive", "member", "csv"])
 
     return binary.select("path", "content").mapInPandas(explode, CSV_LINES_SCHEMA)
-
-
-def parse_csv_members_distributed(
-    members: DataFrame, columns: list[str]
-) -> DataFrame:
-    """Complete S4 path 2: parse each extracted CSV member's bytes into
-    rows, all executor-side (pandas read_csv per member inside the Arrow
-    batch — never touches the driver or a staging filesystem).
-
-    ``columns`` fixes the output schema (all strings — the canonical
-    typed cast happens downstream in normalize_trips, exactly like the
-    staged path). Members missing a column yield nulls; extra columns are
-    dropped — the P2 pad / P3 project semantics at the parse edge.
-    """
-    out_schema = T.StructType([T.StructField(c, T.StringType()) for c in columns])
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                df = pd.read_csv(io.BytesIO(row.csv), dtype=str)
-                df.columns = [str(c) for c in df.columns]
-                for c in columns:
-                    if c not in df.columns:
-                        df[c] = None
-                frames.append(df[columns])
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return members.mapInPandas(parse, out_schema)

@@ -5,8 +5,8 @@ from pyspark.sql import functions as F
 from citibike_deep_dive_spark.normalize import normalize_trips
 from citibike_deep_dive_spark.operators.dockmap import (
     dock_aggregate,
-    dock_export_json,
     dock_merge,
+    dock_merge_fused_json,
     dock_monthly,
 )
 from citibike_deep_dive_spark.operators.heatmap import heatmap_update
@@ -18,7 +18,7 @@ from citibike_deep_dive_spark.operators.tripsmap import (
     trip_aggregate,
     tripsmap_update,
 )
-from citibike_deep_dive_spark.operators.upsert import additive_upsert, anti_insert
+from citibike_deep_dive_spark.operators.upsert import additive_upsert
 
 from tests.trips_fixture import modern_era_pdf
 
@@ -52,13 +52,6 @@ def test_additive_upsert_union_semantics(spark):
     delta = spark.createDataFrame([("b", 10), ("c", 5)], ["k", "cnt"])
     out = {r.k: r.cnt for r in additive_upsert(main, delta, ["k"], ["cnt"]).collect()}
     assert out == {"a": 1, "b": 12, "c": 5}
-
-
-def test_anti_insert(spark):
-    main = spark.createDataFrame([("a",)], ["k"])
-    cand = spark.createDataFrame([("a",), ("b",)], ["k"])
-    out = [r.k for r in anti_insert(main, cand, ["k"]).collect()]
-    assert out == ["b"]
 
 
 def test_trip_aggregate_and_topk(spark):
@@ -175,10 +168,6 @@ def test_dock_pipeline_and_merge(spark):
     d2 = {r.station_name: r for r in merged.collect()}
     assert d2["Alpha"].station_data["2023"].year_starts == 3
 
-    json_out = dock_export_json(merged).collect()[0]
-    assert isinstance(json_out.station_data, str)
-    assert '"year_starts":' in json_out.station_data
-
 
 def test_dock_merge_month_union_new_wins(spark):
     from pyspark.sql import types as T
@@ -230,18 +219,10 @@ def test_dock_merge_month_union_new_wins(spark):
     assert months["Mar"].month_total == 1  # added
 
 
-def test_dock_merge_tagged_equals_two_pipeline(spark):
-    """The fused side-tagged dock pipeline (one scan) must stay
-    result-identical to the two-pipeline + full-outer-join form the
-    catalog carrier uses — the fused shape is the 100 TB scan-bound
-    alternative (see plans/advanced.py and SCALE.md) and must not rot."""
-    from citibike_deep_dive_spark.operators.dockmap import (
-        dock_aggregate,
-        dock_merge,
-        dock_merge_tagged,
-        dock_monthly,
-        dock_yearly,
-    )
+def test_dock_merge_fused_json_equals_two_pipeline(spark):
+    """The flat-merge JSON form the catalog carrier runs (merge at
+    relational grain, serialize via string fragments) is BYTE-identical to
+    to_json(canonical(...)) of the two-pipeline MapType merge."""
     from citibike_deep_dive_spark.plans.advanced import (
         _synth_dock_trips,
         canonical_station_data,
@@ -256,12 +237,6 @@ def test_dock_merge_tagged_equals_two_pipeline(spark):
         dock_aggregate(trips.filter(exist_pred)),
         dock_aggregate(trips.filter(delta_pred)),
     )
-    tagged_in = trips.withColumn(
-        "side", F.when(exist_pred, "e").when(delta_pred, "d")
-    ).filter(F.col("side").isNotNull())
-    fused = dock_merge_tagged(
-        dock_yearly(dock_monthly(tagged_in, ("side",)), ("side",))
-    )
 
     def canon(df):
         out = df.select(
@@ -270,13 +245,6 @@ def test_dock_merge_tagged_equals_two_pipeline(spark):
             F.to_json(canonical_station_data(F.col("station_data"))).alias("sd"),
         )
         return sorted(map(tuple, out.collect()))
-
-    assert canon(two_pipe) == canon(fused)
-
-    # r5: the flat-merge JSON form (what the catalog carrier now runs —
-    # merge at relational grain, serialize via string fragments) must be
-    # BYTE-identical to to_json(canonical(...)) of the MapType merge.
-    from citibike_deep_dive_spark.operators.dockmap import dock_merge_fused_json
 
     flat = dock_merge_fused_json(trips, exist_pred, delta_pred)
     assert sorted(map(tuple, flat.collect())) == canon(two_pipe)

@@ -8,6 +8,7 @@ import zipfile
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from citibike_deep_dive_spark import pipeline
 from citibike_deep_dive_spark.pipeline import DERIVED_TABLES, run_pipeline, read_table
@@ -86,6 +87,35 @@ def test_split_runs_equal_one_run(spark, inbox, tmp_path):
     assert len(run_pipeline(spark, str(split_inbox), split, top_k=5).processed) == 1
 
     assert _snapshot(spark, split) == _snapshot(spark, together)
+
+
+def test_archive_members_with_different_headers_keep_their_rows(spark, tmp_path):
+    """A yearly archive spanning the 2021 format change holds a legacy
+    January and a modern February. Each member is read with its own header,
+    so both months' trips are kept: 2 legacy and 4 modern trips pass the
+    filters of the fixtures."""
+    legacy = legacy_era_pdf().replace({r"/2019 ": "/2021 ", r"^7/": "1/"}, regex=True)
+    modern = modern_era_pdf().replace({r"^2023-07-": "2021-02-"}, regex=True)
+    d = tmp_path / "inbox"
+    d.mkdir()
+    with zipfile.ZipFile(d / "2021-citibike-tripdata.zip", "w") as z:
+        z.writestr("202101-citibike-tripdata.csv", legacy.to_csv(index=False))
+        z.writestr("202102-citibike-tripdata.csv", modern.to_csv(index=False))
+    wh = str(tmp_path / "warehouse")
+    assert len(run_pipeline(spark, str(d), wh, top_k=5).processed) == 1
+
+    heatmap = read_table(spark, wh, "heatmap").groupBy("month").agg(F.sum("total_count"))
+    by_month = {month: n for month, n in heatmap.collect()}
+    assert by_month == {"Jan": 2, "Feb": 4}
+
+
+def test_archive_without_csv_member_raises(spark, tmp_path):
+    d = tmp_path / "inbox"
+    d.mkdir()
+    with zipfile.ZipFile(d / "202307-citibike-tripdata.csv.zip", "w") as z:
+        z.writestr("readme.txt", "no trips here")
+    with pytest.raises(ValueError, match="202307-citibike-tripdata.csv.zip"):
+        run_pipeline(spark, str(d), str(tmp_path / "warehouse"), top_k=5)
 
 
 def test_failed_rewrite_reraises_and_keeps_state(spark, tmp_path, monkeypatch):

@@ -1,17 +1,28 @@
-"""Per-archive fixed cost paid once per session: generated code stays in
-Spark's codegen cache, the operators' Column lists are built once and
-reused, and tables are read with the schema from their Parquet footer."""
+"""Per-archive fixed cost paid once per session, or not at all: generated
+code stays in Spark's codegen cache and never runs interpreted, the
+operators' Column lists are built once and reused, CSVs are read with the
+header as their schema, the cache fills in one job, and tables are written
+from Arrow and read with the schema from their Parquet footer."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import zipfile
 
+import pyarrow.parquet as pq
 import pytest
 
-from citibike_deep_dive_spark import normalize
+from citibike_deep_dive_spark import normalize, pipeline
 from citibike_deep_dive_spark.normalize import normalize_trips
-from citibike_deep_dive_spark.pipeline import DERIVED_TABLES, read_table, run_pipeline
+from citibike_deep_dive_spark.pipeline import (
+    DERIVED_TABLES,
+    SPARK_SCHEMA_KEY,
+    SPARK_VERSION_KEY,
+    read_table,
+    run_pipeline,
+)
 from citibike_deep_dive_spark.sources.zips import read_staged_csvs
 
 from tests.trips_fixture import legacy_era_pdf, modern_era_pdf
@@ -19,10 +30,10 @@ from tests.trips_fixture import legacy_era_pdf, modern_era_pdf
 pytestmark = pytest.mark.pipeline
 
 
-def _write_month(inbox, month: int) -> None:
+def _write_month(inbox, month: int, pdf=None) -> None:
     name = f"2023{month:02d}-citibike-tripdata.csv"
     with zipfile.ZipFile(inbox / f"{name}.zip", "w") as z:
-        z.writestr(name, modern_era_pdf().to_csv(index=False))
+        z.writestr(name, (modern_era_pdf() if pdf is None else pdf).to_csv(index=False))
 
 
 def _compilations(spark) -> int:
@@ -104,9 +115,8 @@ def warehouse(spark, tmp_path):
 
 
 def test_footer_schema_equals_inferred_schema(spark, warehouse):
-    """The footer schema is the schema Spark infers for every table. The
-    tables are written by ``write_table``'s plain Parquet writer, the same
-    writer earlier versions used, so their warehouses read the same way."""
+    """The footer schema is the schema Spark infers for every table, and
+    both reads give the same rows."""
     for name in DERIVED_TABLES:
         path = os.path.join(warehouse, name)
         assert read_table(spark, warehouse, name).schema == spark.read.parquet(path).schema
@@ -124,3 +134,142 @@ def test_read_table_launches_no_job(spark, warehouse):
         assert list(sc.statusTracker().getJobIdsForGroup("read-table")) == []
     finally:
         sc._jsc.clearJobGroup()
+
+
+def _jobs(spark, group: str) -> int:
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cache_fill_is_one_job(spark, tmp_path, monkeypatch):
+    """Before its four rewrites start, a refresh archive has run one job,
+    the ``noop`` write that fills the cache (no CSV schema inference, no
+    multi-job ``count``); the whole archive runs 16.
+
+    Each rewrite thread records the group's job count when it first reads
+    its table, before it launches a job itself, so the smallest record
+    is the count before any rewrite job."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    wh = str(tmp_path / "warehouse")
+    _write_month(inbox, 7)
+    assert len(run_pipeline(spark, str(inbox), wh, top_k=5).processed) == 1
+
+    _write_month(inbox, 8)
+    at_read = []
+    read = pipeline.read_table
+
+    def recording(spark_, warehouse_dir, name):
+        at_read.append(_jobs(spark, "fill"))
+        return read(spark_, warehouse_dir, name)
+
+    monkeypatch.setattr(pipeline, "read_table", recording)
+    spark.sparkContext.setJobGroup("fill", "cache fill test")
+    try:
+        assert len(run_pipeline(spark, str(inbox), wh, top_k=5).processed) == 1
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    assert min(at_read) == 1
+    assert _jobs(spark, "fill") == 16
+
+
+# HotSpot never JIT-compiles a method of more bytecode (-XX:HugeMethodLimit).
+HOTSPOT_HUGE_METHOD_LIMIT = 8000
+
+
+def _largest_methods(spark, df) -> list[int]:
+    """The largest generated method of each whole-stage-codegen subtree of
+    ``df``'s executed plan, compiled as Spark compiles it."""
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    sizes, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName() == "WholeStageCodegenExec":
+            sizes.append(codegen.compile(node.doCodeGen()._2())._2().maxMethodCodeSize())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return sizes
+
+
+def test_normalize_runs_no_method_the_jit_refuses(spark, tmp_path):
+    """Spark runs a whole-stage-codegen subtree as generated code only if
+    its largest method is within ``spark.sql.codegen.hugeMethodLimit``, and
+    falls back otherwise. Under ``get_spark`` no subtree that normalizes
+    either era runs a method HotSpot would leave interpreted (before the
+    limit was set, normalize ran methods of 8008 and 8058 bytes)."""
+    limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    eras = (("legacy", legacy_era_pdf(), "2019"), ("modern", modern_era_pdf(), "2023"))
+    for era, pdf, year in eras:
+        df = normalize_trips(_raw(spark, tmp_path, era, pdf), file_year=year)
+        df.collect()
+        sizes = _largest_methods(spark, df)
+        assert sizes, era
+        assert [s for s in sizes if HOTSPOT_HUGE_METHOD_LIMIT < s <= limit] == [], era
+
+
+def test_tables_are_one_part_file_with_sparks_footer(warehouse):
+    """Each table is one pyarrow-written file carrying the footer keys
+    Spark's writer stores, with timestamps as INT96 like Spark's."""
+    for name in DERIVED_TABLES:
+        assert os.listdir(os.path.join(warehouse, name)) == ["part-00000.parquet"], name
+        part = pq.ParquetFile(os.path.join(warehouse, name, "part-00000.parquet"))
+        assert {SPARK_SCHEMA_KEY, SPARK_VERSION_KEY} <= set(part.metadata.metadata), name
+    trips = pq.ParquetFile(os.path.join(warehouse, "trips", "part-00000.parquet")).schema
+    assert trips.column(trips.names.index("trip_time")).physical_type == "INT96"
+
+
+def _tables(spark, wh):
+    """Every table's fields and rows, the rows as JSON with sorted keys."""
+    out = {}
+    for t in DERIVED_TABLES:
+        df = read_table(spark, wh, t)
+        rows = sorted(json.dumps(json.loads(r), sort_keys=True) for r in df.toJSON().collect())
+        out[t] = (sorted(df.schema.fields, key=lambda f: f.name), rows)
+    return out
+
+
+def _spark_write_table(df, warehouse_dir, name):
+    """``write_table`` as earlier versions had it: Spark's Parquet writer,
+    here with two part files per table."""
+    final = os.path.join(warehouse_dir, name)
+    df.repartition(2).write.mode("overwrite").parquet(final + "__tmp")
+    shutil.rmtree(final, ignore_errors=True)
+    os.replace(final + "__tmp", final)
+
+
+def test_warehouse_written_by_spark_merges_the_same(spark, warehouse, tmp_path, monkeypatch):
+    """A warehouse whose tables Spark's writer left in several part files
+    takes the next archive exactly as one written from Arrow does."""
+    inbox = tmp_path / "inbox"
+    old = str(tmp_path / "spark-written")
+    monkeypatch.setattr(pipeline, "write_table", _spark_write_table)
+    assert len(run_pipeline(spark, str(inbox), old, top_k=5).processed) == 2
+    monkeypatch.undo()
+    assert any(
+        len([f for f in os.listdir(os.path.join(old, t)) if f.endswith(".parquet")]) > 1
+        for t in DERIVED_TABLES
+    )
+    _write_month(inbox, 8)
+    for wh in (old, warehouse):
+        assert len(run_pipeline(spark, str(inbox), wh, top_k=5).processed) == 1
+    assert _tables(spark, old) == _tables(spark, warehouse)
+
+
+def test_archive_with_every_row_filtered_leaves_readable_tables(spark, tmp_path):
+    """A first archive whose rows are all filtered out (here: all of
+    another year) writes empty tables that the next archive merges into;
+    the result equals a warehouse that never saw it."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    wh = str(tmp_path / "warehouse")
+    _write_month(inbox, 6, modern_era_pdf().replace({r"^2023-": "2022-"}, regex=True))
+    assert len(run_pipeline(spark, str(inbox), wh, top_k=5).processed) == 1
+    for name in DERIVED_TABLES:
+        assert read_table(spark, wh, name).count() == 0, name
+
+    clean_inbox = tmp_path / "clean"
+    clean_inbox.mkdir()
+    clean = str(tmp_path / "clean-warehouse")
+    for d, w in ((inbox, wh), (clean_inbox, clean)):
+        _write_month(d, 7)
+        assert len(run_pipeline(spark, str(d), w, top_k=5).processed) == 1
+    assert _tables(spark, wh) == _tables(spark, clean)

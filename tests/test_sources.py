@@ -11,7 +11,6 @@ from citibike_deep_dive_spark.sources.discovery import (
     discover_listing,
     is_candidate,
     parse_file_name,
-    parse_table_name,
 )
 from citibike_deep_dive_spark.sources.state import (
     YearState,
@@ -30,13 +29,6 @@ def test_parse_file_name():
     assert parse_file_name("2023-citibike-tripdata.zip") == (2023, None)
     assert parse_file_name("JC-202307-citibike-tripdata.csv.zip") is None
     assert parse_file_name("garbage.zip") is None
-
-
-def test_parse_table_name_no_crash_on_mismatch():
-    assert parse_table_name("Citibike_2023_07") == (2023, 7)
-    assert parse_table_name("Citibike_2023") == (2023, None)
-    # reference crashed / returned inconsistent values here (SURVEY.md F8)
-    assert parse_table_name("NotATable") == (None, None)
 
 
 def test_listing_filters_and_order():
@@ -181,37 +173,6 @@ def test_zip_distributed_read(spark, tmp_path):
     assert all(r.csv.startswith(b"a,b") for r in out)
 
 
-def test_distributed_zip_to_trips_end_to_end(spark, tmp_path):
-    """S4 path 2 complete: binaryFile → executor-side unzip → executor-side
-    CSV parse → normalize_trips; row-parity with the staged path."""
-    import zipfile as zf
-
-    from citibike_deep_dive_spark.normalize import normalize_trips
-    from citibike_deep_dive_spark.sources.zips import (
-        extract_to_staging,
-        parse_csv_members_distributed,
-        read_staged_csvs,
-        read_zips_distributed,
-    )
-    from tests.trips_fixture import modern_era_pdf
-
-    pdf = modern_era_pdf()
-    zpath = tmp_path / "202307-citibike-tripdata.csv.zip"
-    with zf.ZipFile(zpath, "w") as z:
-        z.writestr("202307-citibike-tripdata.csv", pdf.to_csv(index=False))
-
-    members = read_zips_distributed(spark, str(tmp_path / "*.zip"))
-    raw = parse_csv_members_distributed(members, [str(c) for c in pdf.columns])
-    distributed = normalize_trips(raw, file_year="2023")
-
-    staged = extract_to_staging(str(zpath), str(tmp_path / "staging"))
-    via_staging = normalize_trips(read_staged_csvs(spark, staged), file_year="2023")
-
-    d = sorted(repr(r) for r in distributed.collect())
-    s = sorted(repr(r) for r in via_staging.collect())
-    assert d == s and len(d) > 0
-
-
 def test_staged_members_sharing_a_basename_stay_apart(spark, tmp_path):
     """Members in different folders with one basename are staged as two
     files, so each month's rows are read exactly once."""
@@ -225,3 +186,62 @@ def test_staged_members_sharing_a_basename_stay_apart(spark, tmp_path):
     assert len(set(staged)) == 2
     rows = read_staged_csvs(spark, staged).collect()
     assert sorted(r.ride for r in rows) == ["1", "3", "5"]
+
+
+def _header_files(tmp_path) -> dict[str, str]:
+    """One CSV per header shape: both eras, a quoted header, and empty or
+    (case-insensitively) duplicate names."""
+    from tests.trips_fixture import legacy_era_pdf, modern_era_pdf
+
+    legacy, modern = tmp_path / "legacy.csv", tmp_path / "modern.csv"
+    legacy_era_pdf().to_csv(legacy, index=False)
+    modern_era_pdf().to_csv(modern, index=False)
+    quoted, odd = tmp_path / "quoted.csv", tmp_path / "odd.csv"
+    quoted.write_text('"Trip Duration","Start Time","start, station"\n1,2,3\n')
+    odd.write_text("a,,A,b,a,,B\n1,2,3,4,5,6,7\n")
+    return {p.stem: str(p) for p in (legacy, modern, quoted, odd)}
+
+
+def test_staged_schema_equals_sparks_inferred_schema(spark, tmp_path):
+    """The header read in Python names the columns exactly as Spark's
+    header inference does: both eras, a quoted header, and empty or
+    (case-insensitively) duplicate names."""
+    from citibike_deep_dive_spark.sources.zips import csv_header, read_staged_csvs
+
+    for name, path in _header_files(tmp_path).items():
+        inferred = spark.read.csv(path, header=True, inferSchema=False)
+        assert csv_header(path) == tuple(inferred.columns), name
+        got = read_staged_csvs(spark, [path])
+        assert got.schema == inferred.schema, name
+        assert sorted(map(repr, got.collect())) == sorted(map(repr, inferred.collect()))
+    assert csv_header(_header_files(tmp_path)["odd"]) == (
+        "a0", "_c1", "A2", "b3", "a4", "_c5", "B6"
+    )
+
+
+def test_read_staged_csvs_launches_no_job(spark, tmp_path):
+    from citibike_deep_dive_spark.sources.zips import read_staged_csvs
+
+    paths = _header_files(tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("read-staged", "read_staged_csvs launches no job")
+    try:
+        for path in paths.values():
+            read_staged_csvs(spark, [path])
+        assert list(sc.statusTracker().getJobIdsForGroup("read-staged")) == []
+    finally:
+        sc._jsc.clearJobGroup()
+
+
+def test_members_are_grouped_by_header(tmp_path):
+    """Members group by header in order of first appearance; empty members
+    hold no rows and are left out; one read takes one header only."""
+    from citibike_deep_dive_spark.sources.zips import group_by_header, read_staged_csvs
+
+    files = {"a1": "x,y\n1,2\n", "b1": "y,x\n3,4\n", "empty": "", "a2": "x,y\n5,6\n"}
+    for name, text in files.items():
+        (tmp_path / f"{name}.csv").write_text(text)
+    paths = [str(tmp_path / f"{name}.csv") for name in files]
+    assert group_by_header(paths) == [[paths[0], paths[3]], [paths[1]]]
+    with pytest.raises(ValueError, match="one header"):
+        read_staged_csvs(None, paths[:2])
