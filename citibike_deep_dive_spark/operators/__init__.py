@@ -1,3 +1,2 @@
 """Operators: Spark-first re-expressions of the reference's SQL patterns
-(SURVEY.md §2.3-§2.10) plus the training-data-pipeline extensions
-(dedup, similarity search, text analysis, multimodal)."""
+(SURVEY.md §2.3-§2.10)."""

@@ -8,6 +8,16 @@ Reference (citibike_data_process/table_updating/update_tripsmap.py):
 - per-trip Mapbox Directions enrichment → waypoints JSON (X3, :100-221)
 - UPDATE-add + anti-join INSERT into TripTable (J2/J4, :37-55)
 
+The table holds one row per route identity ``TRIP_KEYS`` = (year, start
+name, end name, rideable_type), so the merge is a 1:1 join. The top-k
+delta is grouped at a finer grain (the coordinates too), so
+``reduce_to_identity`` folds it to that identity before the merge:
+trip counts add, the earliest trip_time and the best rank win, and the
+coordinates are those of the variant with the most trips, ties going to
+the smallest (start lat, start lon, end lat, end lon). The reference
+keeps whichever coordinates its ``GROUP BY`` row arrives with first,
+which is not deterministic.
+
 X3 becomes an Arrow-batched ``mapInPandas`` with an injectable geometry
 provider. The default provider is the reference's *offline* fallback
 semantics made deterministic: straight-line interpolation between the
@@ -52,6 +62,15 @@ GROUP_COLS = [
     "rideable_type",
 ]
 
+COORD_COLS = [
+    "start_station_latitude",
+    "start_station_longitude",
+    "end_station_latitude",
+    "end_station_longitude",
+]
+
+TRIP_KEYS = ["year", "start_station_name", "end_station_name", "rideable_type"]
+
 WAYPOINTS_TYPE = T.ArrayType(
     T.StructType(
         [
@@ -92,6 +111,30 @@ def top_trips(aggregated: DataFrame, k: int = 30) -> DataFrame:
     """W1: top-k routes per year by trip_count, with deterministic
     tiebreaks (the reference has none — SURVEY.md §4)."""
     return top_k_by_rank(aggregated, _top_trips_rank(), k)
+
+
+@functools.cache
+def _identity_exprs() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    # min over (-trip_count, coordinates): the most trips, then the
+    # smallest coordinates
+    pick = F.min(F.struct((-F.col("trip_count")).alias("n"), *COORD_COLS)).alias("pick")
+    aggs = (
+        F.sum("trip_count").alias("trip_count"),
+        F.min("trip_time").alias("trip_time"),
+        F.min("rn").alias("rn"),
+        pick,
+    )
+    out = tuple(F.col(f"pick.{c}").alias(c) if c in COORD_COLS else F.col(c) for c in GROUP_COLS)
+    return aggs, out + (F.col("trip_count"), F.col("trip_time"), F.col("rn"))
+
+
+def reduce_to_identity(top: DataFrame) -> DataFrame:
+    """``top_trips``' rows folded to one per ``TRIP_KEYS`` identity, in
+    the same column order: summed trip_count, earliest trip_time, best
+    rank, and the coordinates of the variant with the most trips (ties:
+    smallest start lat, start lon, end lat, end lon)."""
+    aggs, out = _identity_exprs()
+    return top.groupBy(*TRIP_KEYS).agg(*aggs).select(*out)
 
 
 def haversine_km(lat1: float, lon1: float, lat2: float, lon2: float) -> float:
@@ -287,10 +330,26 @@ def enrich_routes(
     return top.mapInPandas(run, schema=schema)
 
 
+# Legacy-era trips have no rideable_type. The merge matches a null type as
+# a value: it stands in for null during the join only.
+_NO_TYPE = "\u0000"
+
+
+def _type_as_value(df: DataFrame) -> DataFrame:
+    return df.withColumn("rideable_type", F.coalesce("rideable_type", F.lit(_NO_TYPE)))
+
+
 def tripsmap_update(existing: DataFrame | None, delta: DataFrame) -> DataFrame:
-    """I3: additive merge on route identity (J2+J4,
-    update_tripsmap.py:37-55)."""
+    """I3: additive merge on the route identity ``TRIP_KEYS`` (J2+J4,
+    update_tripsmap.py:37-55), a null rideable_type matching a null one.
+    ``delta`` must hold one row per identity (``reduce_to_identity``). The
+    result keeps the existing table's column order, so every write of the
+    table has one schema."""
     if existing is None:
         return delta
-    keys = ["year", "start_station_name", "end_station_name"]
-    return additive_upsert(existing, delta, keys=keys, counters=["trip_count"])
+    merged = additive_upsert(
+        _type_as_value(existing), _type_as_value(delta), keys=TRIP_KEYS, counters=["trip_count"]
+    )
+    return merged.select(*existing.columns).withColumn(
+        "rideable_type", F.nullif("rideable_type", F.lit(_NO_TYPE))
+    )

@@ -31,6 +31,10 @@ Differences from the reference, by design (SURVEY.md §7):
 - an archive's CSV members are read and normalized per distinct header,
   then unioned by name, so a yearly archive that spans the 2021 format
   change keeps both eras' rows;
+- the trips table holds one row per (year, start, end, rideable_type):
+  each archive's top-k routes are reduced to that identity before the
+  merge, with a deterministic choice of coordinates
+  (``operators/tripsmap.py``);
 - route enrichment uses the injectable geometry provider (offline
   deterministic by default — no network in the data path).
 """
@@ -58,6 +62,7 @@ from .operators.linegraph import linegraph_update
 from .operators.tripsmap import (
     GeometryProvider,
     enrich_routes,
+    reduce_to_identity,
     top_trips,
     trip_aggregate,
     tripsmap_update,
@@ -153,7 +158,10 @@ def process_archive(
             "dock": lambda old: dock_merge(old, dock_aggregate(trips)),
             "trips": lambda old: tripsmap_update(
                 old,
-                enrich_routes(top_trips(trip_aggregate(trips), k=top_k), geometry_provider),
+                enrich_routes(
+                    reduce_to_identity(top_trips(trip_aggregate(trips), k=top_k)),
+                    geometry_provider,
+                ),
             ),
         }
 

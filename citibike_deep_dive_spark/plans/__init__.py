@@ -1,48 +1,10 @@
-"""Query catalog: the driver-facing inventory of implemented operators.
+"""Query catalog: the reference-parity operators of SURVEY.md §2 and the
+two document-table queries.
 
 Each entry pairs an idiomatic-Spark DataFrame builder with the equivalent
 ANSI SQL for the DuckDB oracle (driver contract in __spark_entry__.py).
 """
 
 from .catalog import CATALOG, QuerySpec, table  # noqa: F401
-from . import training  # noqa: F401  (registers the training-data queries)
+from . import documents  # noqa: F401  (registers dedup_exact, text_quality_scores)
 from . import advanced  # noqa: F401  (registers the composed-parity queries)
-from . import olap  # noqa: F401  (registers the multi-join OLAP suite)
-from . import curation  # noqa: F401  (registers the curation/profiling suite)
-from . import scalepath  # noqa: F401  (registers the scale-technique suite)
-from . import round6  # noqa: F401  (governance/drift/eval/statistics additions)
-from . import round8  # noqa: F401  (data-selection / two-stage-ANN additions)
-from . import mining  # noqa: F401  (winnowing / bitext / pruning / budget additions)
-from . import round8b  # noqa: F401  (calibration / bootstrap / agreement statistics)
-from . import round8c  # noqa: F401  (quantile-norm / KN-LM / MMR / neg-sampling / Heaps)
-from . import round8d  # noqa: F401  (Good-Turing / DP-Laplace / stylometry / sparse cosine)
-from . import round8e  # noqa: F401  (SAX / BH-FDR / association rules / modularity)
-from . import round8f  # noqa: F401  (query-likelihood / Wilcoxon / KR-20 / SPRT / McNemar)
-from . import round8g  # noqa: F401  (Fourier / bloom-FPP audit / windowed funnel)
-from . import round8h  # noqa: F401  (held-out KN ppl / Brier decomposition / rolling median)
-from . import round8i  # noqa: F401  (Adamic-Adar / count sketch / silhouette)
-from . import round8j  # noqa: F401  (HITS bipartite / importance-weight ESS)
-from . import round8k  # noqa: F401  (Bradley-Terry / CUPED / JSD / ARI / DoReMi / KMV)
-from . import round8l  # noqa: F401  (KNN-Shapley / log-odds / Chao1 / assortativity / STL / RBO)
-from . import round8m  # noqa: F401  (Naive Bayes / GMM-EM / label errors / randomization test / TextRank / IVF-Shapley)
-from . import round8n  # noqa: F401  (Rocchio / CCF / Mann-Kendall / Haar energy)
-from . import round8o  # noqa: F401  (distance correlation / Clarity QPP / IPW / DiD / raking)
-from . import round8p  # noqa: F401  (Min-K% membership / rich club / PCA outliers)
-from . import round8q  # noqa: F401  (RAKE keyphrases / RANSAC trend consensus)
-from . import round8r  # noqa: F401  (Sinkhorn transport plan / beta-binomial shrinkage)
-from . import round8s  # noqa: F401  (gate fairness parity / UCB source allocation)
-from . import round8t  # noqa: F401  (matrix-profile motifs / MASE forecast eval)
-from . import round8u  # noqa: F401  (dispersion index / Warner RR / anisotropy)
-from . import round8v  # noqa: F401  (energy distance / RBF-MMD two-sample)
-from . import round8w  # noqa: F401  (Cramer's V matrix / generalized-ESD rounds)
-from . import round8x  # noqa: F401  (LOF embedding outliers)
-from . import round8y  # noqa: F401  (log-rank churn test / skip-gram PPMI)
-from . import round9  # noqa: F401  (real BMP pixel decode, cross-engine-proven)
-from . import round10  # noqa: F401  (real PNG pixel + WAV PCM decode, cross-engine-proven)
-from . import round10b  # noqa: F401  (unigram-LM Viterbi tokenizer segmentation)
-from . import round10c  # noqa: F401  (chrF generation-eval / corpus-diversity metric)
-from . import round10d  # noqa: F401  (perceptual image hash — DCT-sign near-dup buckets)
-from . import round11  # noqa: F401  (heaps moments bisect probe + Gear CDC dedup)
-from . import round11b  # noqa: F401  (triangles / repeated-substring spans / HLL)
-from . import round12  # noqa: F401  (fixed-point FFT spectral power)
-from . import round13  # noqa: F401  (codec family on the oracle surface + VAD gating)

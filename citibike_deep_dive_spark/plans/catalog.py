@@ -1,4 +1,4 @@
-"""Operator catalog: SURVEY.md §2 inventory + training-data extensions.
+"""Operator catalog: the SURVEY.md §2 inventory.
 
 Every entry is a QuerySpec(name, build, oracle, tags):
 - ``build(spark, sf_dir) -> DataFrame`` — the idiomatic-Spark plan,

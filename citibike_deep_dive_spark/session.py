@@ -51,8 +51,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def get_spark(
     app_name: str = "citibike-deep-dive-spark",
@@ -63,7 +61,8 @@ def get_spark(
     """Build (or fetch) the configured SparkSession.
 
     In production this is a cluster session; locally it defaults to
-    ``local[$SPARK_GRAFT_CPUS]``.
+    ``local[$SPARK_GRAFT_CPUS]``, with as many shuffle partitions unless
+    ``shuffle_partitions`` is given.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -71,7 +70,7 @@ def get_spark(
         .master(master or f"local[{cpus}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # AQE: runtime partition coalescing + skew handling (replaces the
         # reference's manual per-year chunking and its (year,month) index).
@@ -81,10 +80,10 @@ def get_spark(
         # Deterministic timestamp semantics vs the DuckDB oracle. The
         # events TIMESTAMP_NANOS column needs no conf: Spark 4.1+ reads it
         # natively as TIMESTAMP_NTZ (naive wall clock, same as DuckDB),
-        # and plans use functions/timeutil.ts_micros for epoch arithmetic
-        # so they are immune to both the reader flavor and this timezone.
+        # and functions/timeutil.ts_micros gives epoch arithmetic that is
+        # immune to both the reader flavor and this timezone.
         .config("spark.sql.session.timeZone", "UTC")
-        # Arrow for the pandas-UDF edges (route enrichment, multimodal).
+        # Arrow for the pandas-UDF edge (route enrichment with a provider).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

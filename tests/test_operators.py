@@ -14,6 +14,7 @@ from citibike_deep_dive_spark.operators.linegraph import linegraph_aggregate
 from citibike_deep_dive_spark.operators.tripsmap import (
     densify,
     enrich_routes,
+    reduce_to_identity,
     top_trips,
     trip_aggregate,
     tripsmap_update,
@@ -80,6 +81,20 @@ def test_route_enrichment_offline(spark):
         assert wps[1].timestamp == (wps[0].timestamp + 3600) % 86400
 
 
+def test_route_enrichment_keeps_rows_a_provider_has_no_shape_for(spark):
+    """A provider that returns [] (an HTTP provider out of retries) still
+    lands every route row, with empty waypoints, through the mapInPandas
+    path (update_tripsmap.py:148-153)."""
+
+    def no_shape(lat1, lon1, lat2, lon2):
+        return []
+
+    top = top_trips(trip_aggregate(clean_trips(spark)), k=2)
+    rows = enrich_routes(top, no_shape).collect()
+    assert len(rows) == top.count() == 2
+    assert all(r.waypoints == [] for r in rows)
+
+
 def test_route_enrichment_native_equals_pandas(spark):
     """The r5 native-column default path must stay byte-identical (via
     to_json) to the mapInPandas + straight_line_geometry path it
@@ -136,6 +151,47 @@ def test_route_enrichment_native_equals_pandas(spark):
     # call: 0.005° of latitude reads as ~0.15 km → NOT densified (the old
     # correct-distance code would have split this 0.56 km hop)
     assert len(densify([[-73.99, 40.75], [-73.99, 40.755]])) == 2
+
+
+def test_reduce_to_identity_keeps_the_most_travelled_coordinates(spark):
+    """The trips table's identity is (year, start, end, rideable_type).
+    Counts add, the earliest trip_time and the best rank win, and the
+    coordinates are the variant's with the most trips; on a tie, the smallest (start lat,
+    start lon, end lat, end lon). The reference's choice is not
+    deterministic, so this rule is the package's own."""
+    from datetime import datetime
+
+    cols = ["year", "start_station_name", "start_station_latitude",
+            "start_station_longitude", "end_station_name", "end_station_latitude",
+            "end_station_longitude", "rideable_type", "trip_count", "trip_time", "rn"]
+    t1, t2 = datetime(2023, 7, 1, 8), datetime(2023, 7, 2, 9)
+    top = spark.createDataFrame(
+        [
+            # most trips wins, whatever its coordinates
+            ("2023", "A", 40.70, -73.90, "B", 40.80, -73.95, "classic_bike", 1, t1, 6),
+            ("2023", "A", 40.75, -73.99, "B", 40.80, -73.95, "classic_bike", 3, t2, 1),
+            # a tie: the smallest start latitude wins
+            ("2023", "A", 40.75, -73.99, "B", 40.80, -73.95, "electric_bike", 2, t2, 2),
+            ("2023", "A", 40.71, -74.00, "B", 40.80, -73.95, "electric_bike", 2, t1, 3),
+            # a tie on start latitude: the smallest start longitude wins
+            ("2023", "B", 40.70, -73.98, "C", 40.80, -73.95, "classic_bike", 1, t1, 4),
+            ("2023", "B", 40.70, -73.99, "C", 40.80, -73.95, "classic_bike", 1, t1, 5),
+        ],
+        cols,
+    )
+    out = reduce_to_identity(top)
+    assert out.columns == top_trips(trip_aggregate(clean_trips(spark))).columns
+    got = {
+        (r.start_station_name, r.rideable_type): (
+            r.trip_count, r.trip_time, r.rn, r.start_station_latitude, r.start_station_longitude,
+        )
+        for r in out.collect()
+    }
+    assert got == {
+        ("A", "classic_bike"): (4, t1, 1, 40.75, -73.99),
+        ("A", "electric_bike"): (4, t1, 2, 40.71, -74.00),
+        ("B", "classic_bike"): (2, t1, 4, 40.70, -73.99),
+    }
 
 
 def test_tripsmap_update(spark):

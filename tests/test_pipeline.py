@@ -7,6 +7,7 @@ import os
 import zipfile
 
 import duckdb
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,7 +19,7 @@ from citibike_deep_dive_spark.sources.export import (
 )
 from citibike_deep_dive_spark.sources.state import load_state
 
-from tests.trips_fixture import legacy_era_pdf, modern_era_pdf
+from tests.trips_fixture import LAT_A, LON_A, legacy_era_pdf, modern_era_pdf
 
 pytestmark = pytest.mark.pipeline
 
@@ -87,6 +88,90 @@ def test_split_runs_equal_one_run(spark, inbox, tmp_path):
     assert len(run_pipeline(spark, str(split_inbox), split, top_k=5).processed) == 1
 
     assert _snapshot(spark, split) == _snapshot(spark, together)
+
+
+def _month_of_2023(month: int):
+    """The modern fixture moved to ``month`` of 2023. Even months add an
+    electric Alpha->Beta trip; January and July add a classic Alpha->Beta
+    trip from other coordinates. So most archives hold two rows of one
+    (year, start, end) route in their top-k delta."""
+    pdf = modern_era_pdf().replace({r"^2023-07-": f"2023-{month:02d}-"}, regex=True)
+    extra = []
+    if month % 2 == 0:
+        extra.append(pdf.iloc[0].to_dict() | {"ride_id": "r9", "rideable_type": "electric_bike"})
+    if month in (1, 7):
+        extra.append(
+            pdf.iloc[0].to_dict()
+            | {"ride_id": "r10", "start_lat": LAT_A + 0.001, "start_lng": LON_A + 0.001}
+        )
+    return pd.concat([pdf, pd.DataFrame(extra)], ignore_index=True)
+
+
+def test_trips_table_holds_one_row_per_identity_over_a_year(spark, tmp_path):
+    """Twelve monthly archives of one year. The trips table holds one row
+    per (year, start, end, rideable_type), and each row's trip_count is
+    the sum of that identity's per-archive top-k deltas. The table's
+    column order is the same after the first write and the last."""
+    from citibike_deep_dive_spark.normalize import normalize_trips
+    from citibike_deep_dive_spark.operators.tripsmap import (
+        TRIP_KEYS,
+        top_trips,
+        trip_aggregate,
+    )
+
+    d = tmp_path / "inbox"
+    d.mkdir()
+    expected: dict[tuple, int] = {}
+    for month in range(1, 13):
+        pdf = _month_of_2023(month)
+        name = f"2023{month:02d}-citibike-tripdata.csv"
+        with zipfile.ZipFile(d / f"{name}.zip", "w") as z:
+            z.writestr(name, pdf.to_csv(index=False))
+        delta = top_trips(
+            trip_aggregate(normalize_trips(spark.createDataFrame(pdf), file_year="2023")),
+            k=30,
+        )
+        for r in delta.collect():
+            key = tuple(r[k] for k in TRIP_KEYS)
+            expected[key] = expected.get(key, 0) + r.trip_count
+    assert expected == {
+        ("2023", "Alpha", "Beta", "classic_bike"): 26,
+        ("2023", "Alpha", "Beta", "electric_bike"): 6,
+        ("2023", "Beta", "Gamma", "electric_bike"): 12,
+    }
+
+    wh = str(tmp_path / "warehouse")
+    assert len(run_pipeline(spark, str(d), wh, top_k=30).processed) == 12
+    trips = read_table(spark, wh, "trips")
+    rows = trips.collect()
+    assert {tuple(r[k] for k in TRIP_KEYS): r.trip_count for r in rows} == expected
+    assert len(rows) == len(expected)
+    # January's classic trips: two from Alpha's coordinates, one from the
+    # other ones; the most-travelled coordinates stay
+    classic = [r for r in rows if r.rideable_type == "classic_bike"][0]
+    assert (classic.start_station_latitude, classic.start_station_longitude) == (LAT_A, LON_A)
+    assert trips.columns == top_trips(trip_aggregate(
+        normalize_trips(spark.createDataFrame(modern_era_pdf()), file_year="2023")
+    )).columns + ["waypoints"]
+
+
+def test_legacy_months_merge_on_a_null_rideable_type(spark, tmp_path):
+    """Legacy-era trips have no rideable_type, so the identity's type is
+    null. Two monthly legacy archives of one year still leave one row per
+    route, with the counts added and the type still null."""
+    d = tmp_path / "inbox"
+    d.mkdir()
+    for month in (7, 8):
+        pdf = legacy_era_pdf().replace({r"^7/": f"{month}/"}, regex=True)
+        name = f"2019{month:02d}-citibike-tripdata.csv"
+        with zipfile.ZipFile(d / f"{name}.zip", "w") as z:
+            z.writestr(name, pdf.to_csv(index=False))
+    wh = str(tmp_path / "warehouse")
+    assert len(run_pipeline(spark, str(d), wh, top_k=30).processed) == 2
+    rows = read_table(spark, wh, "trips").collect()
+    got = {(r.start_station_name, r.end_station_name, r.rideable_type): r.trip_count for r in rows}
+    assert got == {("Alpha", "Beta", None): 2, ("Gamma", "Alpha", None): 2}
+    assert len(rows) == 2
 
 
 def test_archive_members_with_different_headers_keep_their_rows(spark, tmp_path):
