@@ -3,22 +3,47 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash).
+value-hash → CORRECTNESS_r{N}.json).
 
-The catalog itself lives in ``citibike_deep_dive_spark.plans``: one
-QuerySpec per reference-parity operator from SURVEY.md §2, plus the two
-document-table queries.
+The catalog itself lives in ``citibike_deep_dive_spark.plans`` — one
+QuerySpec per implemented operator from SURVEY.md §2 plus the
+training-data extensions (dedup / similarity / text / multimodal /
+streaming-analog).
+
+Verify ordering (r12, VERDICT r11 item 7): the order is now DERIVED
+from the CORRECTNESS_r*.json history at import time instead of a
+hand-maintained list — the evidence-age invariant ("no query's last
+green row may be older than N rounds") is code, not prose:
+
+1. queries whose LATEST driver row is red (fix verification first —
+   this round: the heaps family, rewritten to integer anchors);
+2. active PINNED_SURFACES — the formerly micro-quantized-transcendental
+   queries (VERDICT r11 item 3): re-verified at the head of the
+   rotation until the retirement rule fires (r13, VERDICT r12 item 3:
+   two consecutive green rounds after the r12 libm-independence
+   rewrite), after which they rejoin the normal age-based rotation;
+3. queries never driver-verified (the new-adds-verify-next-round rule —
+   this round: the five r11 adds);
+4. everything else by ascending last-green round (oldest evidence
+   first), alphabetical within a round — the rotation that cleared the
+   r2/r3 backlog in r11 and finishes it this round.
+
+Every entry is preflight.py-exact before commit.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from citibike_deep_dive_spark.plans import CATALOG  # noqa: E402
 
@@ -32,9 +57,120 @@ def entry(spark: SparkSession) -> DataFrame:
     return CATALOG["linegraph_conditional_counts"].build(spark, SMOKE_SF_DIR)
 
 
+# The two surfaces that carried micro-quantized transcendental math
+# (DFT trig table / DCT factors). The r11 heaps_moments_probe proved
+# cross-build libm divergence is a real failure mode, so these were
+# pinned at the head of every rotation (VERDICT r11 item 3); the r12
+# rewrite made both libm-independent BY CONSTRUCTION (build-time
+# literal tables injected into both engines — SCALE.md determinism
+# contract), which makes permanent pinning a waste of verify slots.
+#
+# RETIREMENT RULE (r13, VERDICT r12 item 3): a pin returns to the
+# normal age-based rotation once it has _PIN_RETIRE_STREAK consecutive
+# green driver rounds at or after _PIN_FIX_ROUND (the round the
+# libm-independence rewrite shipped) — by then the rewrite itself has
+# been driver-proven on multiple engine builds and the ordinary
+# evidence-age invariant (every query re-verified within ~8 rounds)
+# gives the same cross-build coverage every other query gets. With r12
+# green, one more green round retires both and the two slots return to
+# the aging tail the round after.
+PINNED_SURFACES = [
+    "multimodal_wav_spectral_features",
+    "multimodal_image_phash_buckets",
+]
+_PIN_FIX_ROUND = 12
+_PIN_RETIRE_STREAK = 2
+
+
+def _correctness_history() -> dict[str, tuple[int | None, int | None, bool]]:
+    """Fold CORRECTNESS_r*.json into {query: (last_green_round,
+    last_seen_round, latest_row_green)}. A row is green when every
+    *_match field present is true and err is null — rows-only entries
+    (no hash_match) count on their weaker rows+schema check, mirroring
+    the driver."""
+    hist: dict[str, tuple[int | None, int | None, bool]] = {}
+    for path in sorted(glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json"))):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        try:
+            with open(path) as f:
+                data = json.load(f)
+        except (OSError, ValueError):
+            continue
+        for name, row in data.items():
+            if not isinstance(row, dict):
+                continue
+            green = row.get("err") is None and all(
+                row.get(k, True)
+                for k in ("rows_match", "schema_match", "hash_match")
+            )
+            last_green, last_seen, _ = hist.get(name, (None, None, False))
+            if last_seen is None or rnd >= last_seen:
+                hist[name] = (
+                    rnd if green else last_green,
+                    rnd,
+                    green,
+                )
+            elif green and (last_green is None or rnd > last_green):
+                hist[name] = (rnd, last_seen, hist[name][2])
+    return hist
+
+
+def _pin_green_streak(name: str) -> int:
+    """Consecutive green driver rounds for ``name`` counting only
+    rounds >= _PIN_FIX_ROUND (reset to 0 by any red) — the retirement
+    counter for PINNED_SURFACES."""
+    streak = 0
+    for path in sorted(glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json"))):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if not m or int(m.group(1)) < _PIN_FIX_ROUND:
+            continue
+        try:
+            with open(path) as f:
+                row = json.load(f).get(name)
+        except (OSError, ValueError):
+            continue
+        if not isinstance(row, dict):
+            continue
+        green = row.get("err") is None and all(
+            row.get(k, True) for k in ("rows_match", "schema_match", "hash_match")
+        )
+        streak = streak + 1 if green else 0
+    return streak
+
+
+def active_pins() -> list[str]:
+    """PINNED_SURFACES still awaiting retirement (see the rule above);
+    retired pins rejoin the age-based rotation automatically."""
+    return [
+        n for n in PINNED_SURFACES if _pin_green_streak(n) < _PIN_RETIRE_STREAK
+    ]
+
+
+def verify_order() -> list[str]:
+    """Catalog names in driver-verify priority order (see module doc)."""
+    hist = _correctness_history()
+    reds = sorted(
+        n
+        for n, (_, seen, latest_green) in hist.items()
+        if n in CATALOG and seen is not None and not latest_green
+    )
+    pinned = [n for n in active_pins() if n in CATALOG and n not in reds]
+    never = sorted(n for n in CATALOG if n not in hist)
+    taken = set(reds) | set(pinned) | set(never)
+    aged = sorted(
+        (n for n in CATALOG if n not in taken),
+        key=lambda n: (hist[n][0] if hist[n][0] is not None else -1, n),
+    )
+    return reds + pinned + never + aged
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per catalog query, in ``CATALOG`` order."""
-    return {name: spec.build for name, spec in CATALOG.items()}
+    """One entry per implemented operator from SURVEY.md §2 (+ extensions),
+    ordered so the driver's bounded verify covers new ground each round."""
+    return {name: CATALOG[name].build for name in verify_order()}
 
 
 def oracle_sql() -> dict[str, str]:

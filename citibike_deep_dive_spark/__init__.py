@@ -1,9 +1,10 @@
 """citibike_deep_dive_spark — a PySpark-native analytics engine.
 
-A from-scratch Spark-first re-expression of the reference pipeline
-gabrielAHN/Citibike-Deep-Dive (an incremental Citibike → DuckDB batch
-ETL): ``pipeline`` runs the loop, ``plans`` holds the catalog of its
-operators as queries with DuckDB oracles.
+A from-scratch Spark-first re-expression of the query and data-processing
+capabilities of the reference pipeline gabrielAHN/Citibike-Deep-Dive
+(an incremental Citibike → DuckDB batch ETL), extended with the operators a
+large-scale training-data pipeline needs (dedup, similarity search,
+multimodal columns, text analysis).
 
 Design principles (see SURVEY.md §7):
 - DataFrame/SQL declarative plans; Catalyst does the optimizing.

@@ -1,1 +1,8 @@
 """Reusable column-expression library (the engine's `F`-extensions)."""
+
+from .portable import (  # noqa: F401
+    portable_hash64,
+    portable_hash64_sql,
+    portable_unit_uniform,
+    portable_unit_uniform_sql,
+)

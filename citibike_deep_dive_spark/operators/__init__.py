@@ -1,2 +1,3 @@
 """Operators: Spark-first re-expressions of the reference's SQL patterns
-(SURVEY.md §2.3-§2.10)."""
+(SURVEY.md §2.3-§2.10) plus the training-data-pipeline extensions
+(dedup, similarity search, text analysis, multimodal)."""

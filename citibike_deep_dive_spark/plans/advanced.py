@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from ..normalize import month_abbrev, normalize_trips
 from ..operators.dockmap import canonical_station_data, dock_aggregate, dock_merge
-from ..operators.fanout import fan_out
 from ..operators.tripsmap import enrich_routes, top_trips, trip_aggregate
 from .catalog import register, table
 
@@ -613,6 +612,8 @@ def normalize_trips_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     run on a single core end-to-end. barrier=True keeps clean_filters'
     year predicate (a timestamp round-trip per row) from being pushed
     back below the exchange onto the single scan task."""
+    from ..operators.fanout import fan_out
+
     ev = fan_out(table(spark, sf_dir, "events"), barrier=True)
     raw = ev.select(
         F.col("event_id").cast("string").alias("ride_id"),
@@ -664,4 +665,139 @@ def normalize_trips_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rideable_type",
         "year",
         "month",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Reshaping surface: unpivot (wide→long melt) and grouping sets
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "unpivot_lineitem_measures",
+    """
+    SELECT l_orderkey, l_linenumber, metric, round(val, 2) AS val
+    FROM (
+        SELECT l_orderkey, l_linenumber, 'quantity' AS metric, l_quantity AS val
+        FROM lineitem
+        UNION ALL
+        SELECT l_orderkey, l_linenumber, 'extendedprice', l_extendedprice
+        FROM lineitem
+        UNION ALL
+        SELECT l_orderkey, l_linenumber, 'discount', l_discount FROM lineitem
+        UNION ALL
+        SELECT l_orderkey, l_linenumber, 'tax', l_tax FROM lineitem
+    )
+    WHERE l_orderkey % 100 = 0
+    """,
+    tags=("X-unpivot",),
+)
+def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Wide→long melt of the four lineitem measures via DataFrame.unpivot
+    (Spark's Expand operator: one scan emits all metric rows — NOT four
+    scans like the naive UNION ALL — so at 100 TB the fact table is read
+    once). The modulo filter keeps the fixture output bounded; it rides
+    the scan before the Expand."""
+    li = table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 100 == 0)
+    return li.unpivot(
+        ["l_orderkey", "l_linenumber"],
+        ["l_quantity", "l_extendedprice", "l_discount", "l_tax"],
+        "metric",
+        "val",
+    ).select(
+        "l_orderkey",
+        "l_linenumber",
+        F.expr("substring(metric, 3)").alias("metric"),
+        F.round("val", 2).alias("val"),
+    )
+
+
+@register(
+    "grouping_sets_doc_counts",
+    """
+    SELECT coalesce(source, 'ALL') AS source_key,
+           coalesce(lang, 'ALL') AS lang_key,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(n_chars) AS BIGINT) AS total_chars
+    FROM documents
+    GROUP BY GROUPING SETS ((source), (lang), ())
+    """,
+    tags=("X-grouping-sets",),
+)
+def grouping_sets_doc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-grain corpus accounting in ONE pass: per-source, per-lang,
+    and grand totals via GROUPING SETS (Spark's Expand + single
+    aggregate — not three scans). source/lang are non-null in the data,
+    so the COALESCE sentinel unambiguously marks the rolled-up grain."""
+    docs = table(spark, sf_dir, "documents")
+    return (
+        docs.groupingSets([["source"], ["lang"], []], "source", "lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").cast("long").alias("total_chars"),
+        )
+        .select(
+            F.coalesce("source", F.lit("ALL")).alias("source_key"),
+            F.coalesce("lang", F.lit("ALL")).alias("lang_key"),
+            "n_docs",
+            "total_chars",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Geo analytics: haversine trip distances (columnar twin of
+# tripsmap.haversine_km — reference update_tripsmap.py:107-118)
+# ---------------------------------------------------------------------------
+
+_HAVERSINE_SQL = """
+    2 * 6371.0088 * asin(sqrt(
+        pow(sin(radians(end_station_latitude - start_station_latitude) / 2), 2)
+        + cos(radians(start_station_latitude)) * cos(radians(end_station_latitude))
+          * pow(sin(radians(end_station_longitude - start_station_longitude) / 2), 2)
+    ))
+"""
+
+
+def _haversine_km_col():
+    dlat = F.radians(F.col("end_station_latitude") - F.col("start_station_latitude"))
+    dlon = F.radians(F.col("end_station_longitude") - F.col("start_station_longitude"))
+    a = (
+        F.pow(F.sin(dlat / 2), 2)
+        + F.cos(F.radians("start_station_latitude"))
+        * F.cos(F.radians("end_station_latitude"))
+        * F.pow(F.sin(dlon / 2), 2)
+    )
+    return 2 * 6371.0088 * F.asin(F.sqrt(a))
+
+
+@register(
+    "trip_distance_stats",
+    f"""
+    WITH {_DOCK_TRIPS_SQL.strip()},
+    d AS (SELECT year, {_HAVERSINE_SQL} AS km FROM trips)
+    SELECT year, CAST(count(*) AS BIGINT) AS trips,
+           round(avg(km), 4) AS avg_km,
+           round(max(km), 4) AS max_km,
+           CAST(count(CASE WHEN km = 0 THEN 1 END) AS BIGINT) AS self_loops
+    FROM d GROUP BY year
+    """,
+    tags=("X-geo-distance",),
+)
+def trip_distance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-year haversine distance profile of the synthesized trips —
+    the columnar (whole-stage-codegen) twin of the pandas-path
+    haversine_km used by route densification. Pure column math: no
+    shuffle beyond the final year rollup."""
+    trips = _synth_dock_trips(table(spark, sf_dir, "orders"))
+    km = _haversine_km_col()
+    return (
+        trips.select("year", km.alias("km"))
+        .groupBy("year")
+        .agg(
+            F.count("*").alias("trips"),
+            F.round(F.avg("km"), 4).alias("avg_km"),
+            F.round(F.max("km"), 4).alias("max_km"),
+            F.count(F.when(F.col("km") == 0, 1)).alias("self_loops"),
+        )
     )

@@ -1,4 +1,4 @@
-"""Operator catalog: the SURVEY.md §2 inventory.
+"""Operator catalog: SURVEY.md §2 inventory + training-data extensions.
 
 Every entry is a QuerySpec(name, build, oracle, tags):
 - ``build(spark, sf_dir) -> DataFrame`` — the idiomatic-Spark plan,

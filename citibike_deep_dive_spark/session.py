@@ -80,10 +80,10 @@ def get_spark(
         # Deterministic timestamp semantics vs the DuckDB oracle. The
         # events TIMESTAMP_NANOS column needs no conf: Spark 4.1+ reads it
         # natively as TIMESTAMP_NTZ (naive wall clock, same as DuckDB),
-        # and functions/timeutil.ts_micros gives epoch arithmetic that is
-        # immune to both the reader flavor and this timezone.
+        # and plans use functions/timeutil.ts_micros for epoch arithmetic
+        # so they are immune to both the reader flavor and this timezone.
         .config("spark.sql.session.timeZone", "UTC")
-        # Arrow for the pandas-UDF edge (route enrichment with a provider).
+        # Arrow for the pandas-UDF edges (route enrichment, multimodal).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

@@ -1,10 +1,91 @@
-"""Driver-contract guards: ``queries()`` and ``oracle_sql()`` cover the
-catalog, and every oracle-backed query emits scalar columns only."""
+"""Driver-contract guards: the verify ordering is now DERIVED from the
+CORRECTNESS_r*.json history (VERDICT r11 item 7 — the evidence-age
+invariant as code). These tests pin the derivation's contract: reds
+first, pinned trig surfaces next, never-verified adds after, then
+oldest evidence first."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
+
 import __spark_entry__ as entry
 from citibike_deep_dive_spark.plans import CATALOG
+
+_REPO = os.path.dirname(os.path.abspath(entry.__file__))
+
+
+def _latest_rows():
+    """{name: (round, green)} for each query's most recent driver row."""
+    latest: dict[str, tuple[int, bool]] = {}
+    for path in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
+        for name, row in json.load(open(path)).items():
+            green = row.get("err") is None and all(
+                row.get(k, True)
+                for k in ("rows_match", "schema_match", "hash_match")
+            )
+            latest[name] = (rnd, green)
+    return latest
+
+
+def test_verify_order_is_valid_and_complete():
+    order = entry.verify_order()
+    assert len(order) == len(set(order))
+    assert set(order) == set(CATALOG)
+
+
+def test_verify_order_puts_reds_then_pins_then_never_verified_first():
+    order = entry.verify_order()
+    latest = _latest_rows()
+    reds = sorted(
+        n for n, (_, green) in latest.items() if n in CATALOG and not green
+    )
+    pinned = [n for n in entry.active_pins() if n not in reds]
+    never = sorted(n for n in CATALOG if n not in latest)
+    head = reds + pinned + never
+    assert order[: len(head)] == head
+    # pinned surfaces really exist — a rename must not silently unpin
+    assert all(n in CATALOG for n in entry.PINNED_SURFACES)
+
+
+def test_pin_retirement_rule():
+    # the streak counts only rounds >= the libm-independence rewrite
+    # round and resets on red; a pin retires at the streak threshold
+    for name in entry.PINNED_SURFACES:
+        streak = entry._pin_green_streak(name)
+        assert streak >= 0
+        active = name in entry.active_pins()
+        assert active == (streak < entry._PIN_RETIRE_STREAK)
+    # both pins were green in r12 (the rewrite round) — the streak
+    # machinery must see at least that round
+    assert all(
+        entry._pin_green_streak(n) >= 1 for n in entry.PINNED_SURFACES
+    )
+
+
+def test_verify_order_ages_oldest_evidence_first():
+    order = entry.verify_order()
+    latest = _latest_rows()
+    hist = entry._correctness_history()
+    head_len = len(
+        [n for n, (_, g) in latest.items() if n in CATALOG and not g]
+    )
+    tail = order[head_len:]
+    tail = [n for n in tail if n not in entry.PINNED_SURFACES and n in hist]
+    ages = [hist[n][0] if hist[n][0] is not None else -1 for n in tail]
+    assert ages == sorted(ages)
+
+
+def test_front_of_queue_is_oracle_backed():
+    names = list(entry.queries())
+    oracles = entry.oracle_sql()
+    # Since r5 every catalog entry carries a value-checked oracle —
+    # nothing un-backed may sit in the verify queue's front 50 slots.
+    unbacked = [n for n in names[:50] if n not in oracles]
+    assert unbacked == [], f"front-of-queue entries without oracle: {unbacked}"
 
 
 def test_queries_and_oracles_cover_catalog():

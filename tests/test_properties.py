@@ -1,19 +1,96 @@
 """Property-based tests (hypothesis) for engine-portable invariants.
 
 Each property runs a Spark job per example, so example counts are kept
-small — the value is the input-space coverage (column subsets) that
-fixture-based tests never reach."""
+small — the value is the input-space coverage (unicode, boundary floats,
+column subsets) that fixture-based tests never reach."""
 
 from __future__ import annotations
 
+import duckdb
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 SETTINGS = settings(
     max_examples=8,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
+
+# DuckDB VARCHAR rejects NUL; surrogates are excluded by st.text default.
+_texts = st.lists(
+    st.text(
+        alphabet=st.characters(blacklist_characters="\x00", codec="utf-8"),
+        max_size=40,
+    ),
+    min_size=1,
+    max_size=20,
+    unique=True,
+)
+
+
+@given(words=_texts)
+@SETTINGS
+def test_portable_hash_matches_duckdb(spark, words):
+    """The md5-hex→BIGINT hash family (basis of every bucketed join,
+    salting key, and deterministic sample in the repo) must agree
+    bit-for-bit between Spark and the DuckDB oracle for ANY input."""
+    sdf = spark.createDataFrame([(w,) for w in words], ["s"])
+    got = {
+        r["s"]: r["h"]
+        for r in sdf.select(
+            "s",
+            F.conv(F.substring(F.md5(F.col("s")), 1, 15), 16, 10)
+            .cast("long")
+            .alias("h"),
+        ).collect()
+    }
+    con = duckdb.connect()
+    for w in words:
+        (expect,) = con.execute(
+            "SELECT ('0x' || substr(md5(?), 1, 15))::BIGINT", [w]
+        ).fetchone()
+        assert got[w] == expect, f"hash mismatch for {w!r}"
+
+
+_vectors = st.lists(
+    st.floats(
+        min_value=-1e6,
+        max_value=1e6,
+        allow_nan=False,
+        allow_infinity=False,
+        width=32,
+    ),
+    min_size=2,
+    max_size=16,
+)
+
+
+@given(vec=_vectors)
+@SETTINGS
+def test_int8_quantize_error_bound(spark, vec):
+    """Affine round-to-nearest quantization can never err more than half
+    a step: max_abs_err ≤ scale/2 (scale==0 ⇒ exact)."""
+    from citibike_deep_dive_spark.operators.similarity import int8_quantize
+
+    emb = spark.createDataFrame(
+        [(0, vec)],
+        T.StructType(
+            [
+                T.StructField("vec_id", T.LongType()),
+                T.StructField("embedding", T.ArrayType(T.FloatType())),
+            ]
+        ),
+    )
+    row = int8_quantize(emb).collect()[0]
+    assert all(0 <= q <= 255 for q in row["qvals"])
+    if row["scale"] > 0:
+        # scale is rounded to 6dp for output; allow that rounding slack.
+        assert row["max_abs_err"] <= row["scale"] / 2 + 1e-5
+    else:
+        assert row["max_abs_err"] == 0.0
 
 
 _canonical_subset = st.sets(

@@ -25,3 +25,44 @@ def test_all_queries_analyze_under_hostile_timezone(spark):
         spark.conf.set("spark.sql.session.timeZone", prev)
     assert not failures, "analysis failed under non-UTC session:\n" + "\n".join(failures)
 
+
+def test_float_aggregates_are_partitioning_invariant(spark):
+    """Float sums/averages reorder under different partition counts; any
+    query whose OUTPUT depends on that ordering will flip the driver's
+    exact value-hash nondeterministically (the class of bug behind the
+    r4 salted-sum drift — fixed by rounding at the edge). Run the
+    cancellation-prone aggregate queries under two partition counts and
+    require identical EXACT results (the 6-dp-tolerant oracle-harness
+    comparison would mask exactly this drift; the repo convention is to
+    round float outputs at the edge, which is what makes exact
+    invariance achievable)."""
+    from preflight import _exact as _norm
+
+    QUERIES = [
+        "skew_salted_aggregate",
+        "value_trend_by_type",
+        "moment_aggregates",
+        "embedding_dim_covariance",
+        "trip_distance_stats",
+        "training_corpus_prep",
+    ]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    failures = []
+    try:
+        results = {}
+        for n in ("7", prev):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            for name in QUERIES:
+                df = CATALOG[name].build(spark, SF_DIR)
+                cols = sorted(df.columns)
+                rows = sorted(
+                    tuple(_norm(r[c]) for c in cols)
+                    for r in (row.asDict() for row in df.collect())
+                )
+                results.setdefault(name, []).append(rows)
+        for name, (a, b) in results.items():
+            if a != b:
+                failures.append(name)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert not failures, f"partitioning-dependent results: {failures}"
