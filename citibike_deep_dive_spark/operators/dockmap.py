@@ -20,14 +20,14 @@ Python in the executor hot path. JSON text exists only at export
 Determinism: ANY_VALUE becomes max() so DuckDB-oracle hashes are stable
 (SURVEY.md §4).
 
-The Column lists of the aggregate and merge depend only on ``extra_keys``,
-so ``functools.cache`` builders make each once per process.
+The Column lists of the aggregate and merge do not depend on the
+archive, so ``functools.cache`` builders make each once per process.
 
-Scale notes: the whole pipeline is two shuffles — one hash aggregation to
+Scale notes: the aggregation is two shuffles — one hash aggregation to
 (station, year, month) grain (map-side combined), one re-agg to station
-grain. The deep merge joins on station_name only; the delta (one month of
-stations, ~2k rows) is broadcast so the existing 100 TB-scale table never
-reshuffles.
+grain. The deep merge is a full outer join on station_name, which Spark
+plans as a sort-merge join: both sides shuffle on the key. Both hold one
+row per station, a few thousand rows.
 """
 
 from __future__ import annotations
@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 
 @functools.cache
-def _monthly_exprs(extra_keys: tuple[str, ...]):
+def _monthly_exprs():
     """(sides select, filter, groupBy keys, aggregates, final select) of
     dock_monthly."""
 
@@ -53,7 +53,6 @@ def _monthly_exprs(extra_keys: tuple[str, ...]):
         )
 
     sides = (
-        *extra_keys,
         "year",
         "month",
         F.explode(F.array(_side("start", 1), _side("end", 0))).alias("s"),
@@ -66,7 +65,7 @@ def _monthly_exprs(extra_keys: tuple[str, ...]):
             F.max(F.when(~start, F.col(f"s.{name}"))),
         ).alias(name)
 
-    keys = (*extra_keys, F.col("s.station_name").alias("station_name"), "year", "month")
+    keys = (F.col("s.station_name").alias("station_name"), "year", "month")
     aggs = (
         _attr("station_id"),
         _attr("station_latitude"),
@@ -75,7 +74,6 @@ def _monthly_exprs(extra_keys: tuple[str, ...]):
         F.count("*").alias("month_total"),
     )
     out = (
-        *extra_keys,
         "station_name",
         "year",
         "month",
@@ -89,11 +87,9 @@ def _monthly_exprs(extra_keys: tuple[str, ...]):
     return sides, F.col("s.station_name").isNotNull(), keys, aggs, out
 
 
-def dock_monthly(trips: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
+def dock_monthly(trips: DataFrame) -> DataFrame:
     """A4 + J1: starts ⟗ ends per (station, year, month), attrs coalesced
-    starts-first (update_dockmap.py:54-96). ``extra_keys`` prepends extra
-    grouping columns (e.g. a side tag) so several logical pipelines share
-    ONE physical scan+shuffle — see dock_deep_merge_nested_maps.
+    starts-first (update_dockmap.py:54-96).
 
     Fused single-scan form: instead of two side aggregations full-outer
     joined back together (two scans of the trips + a shuffle join), unpivot
@@ -112,7 +108,7 @@ def dock_monthly(trips: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFram
     halves the input volume and removes the (station, year, month)
     shuffle join entirely.
     """
-    sides, present, keys, aggs, out = _monthly_exprs(tuple(extra_keys))
+    sides, present, keys, aggs, out = _monthly_exprs()
     return (
         trips.select(*sides)
         .filter(present)
@@ -145,10 +141,10 @@ def _yearly_aggs() -> tuple[Column, ...]:
     )
 
 
-def dock_yearly(monthly: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
+def dock_yearly(monthly: DataFrame) -> DataFrame:
     """A5 + A6: month → year rollup; the months map replaces DuckDB's
     json_group_object (update_dockmap.py:110-129)."""
-    return monthly.groupBy(*extra_keys, "station_name", "year").agg(*_yearly_aggs())
+    return monthly.groupBy("station_name", "year").agg(*_yearly_aggs())
 
 
 @functools.cache
@@ -169,18 +165,16 @@ def _station_aggs() -> tuple[Column, ...]:
     )
 
 
-def dock_station(yearly: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
+def dock_station(yearly: DataFrame) -> DataFrame:
     """A7 + X1: collect each station's year-objects into one map — the
     reference's json_group_array + Python dict.update loop
     (update_dockmap.py:146-196), as map_from_entries over sorted entries."""
-    return yearly.groupBy(*extra_keys, "station_name").agg(*_station_aggs())
+    return yearly.groupBy("station_name").agg(*_station_aggs())
 
 
-def dock_aggregate(trips: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
+def dock_aggregate(trips: DataFrame) -> DataFrame:
     """Full new-data pipeline: trips → per-station nested station_data."""
-    return dock_station(
-        dock_yearly(dock_monthly(trips, extra_keys), extra_keys), extra_keys
-    )
+    return dock_station(dock_yearly(dock_monthly(trips)))
 
 
 def _merged_station_data(e_data, d_data):
@@ -239,123 +233,8 @@ def dock_merge(existing: DataFrame | None, delta: DataFrame) -> DataFrame:
     """
     if existing is None:
         return delta
-    joined = existing.alias("e").join(
-        F.broadcast(delta).alias("d"), "station_name", "full_outer"
-    )
+    joined = existing.alias("e").join(delta.alias("d"), "station_name", "full_outer")
     return joined.select(*_merge_select())
-
-
-def dock_merge_fused_json(
-    trips: DataFrame,
-    existing_cond,
-    delta_cond,
-) -> DataFrame:
-    """X1 + X2 deep merge, fused and flattened: ONE scan, TWO shuffles,
-    zero joins, zero interpreted higher-order functions.
-
-    The MapType form (dock_merge) builds both sides'
-    nested station_data maps and then deep-merge them with map_zip_with —
-    semantically direct, but map construction + lambda-comparator sorts
-    run interpreted (outside whole-stage codegen) and the merge happens
-    AFTER the expensive nesting. This form does the merge while the data
-    is still relational, where new-wins is a codegen'd conditional max:
-
-    - month level: delta's (station, year, month) row replaces existing's
-      (update_dockmap.py:229-234 month union, new wins),
-    - year level: delta's year sums replace existing's when delta has the
-      year (year attrs replace),
-    - station attrs: delta wins when present,
-
-    then serializes straight to canonical JSON text with sort_array over
-    string fragments (each fragment starts with its quoted key; keys are
-    fixed-width tokens, so fragment order == key order) — every operator
-    codegen-friendly. Plan shape: unpivoted single scan → map-side-combined
-    aggregation to (side, station, year, month) grain [shuffle 1, reduced
-    volume] → repartition(station_name) [shuffle 2, aggregated rows only]
-    → three further aggregations all exchange-free because hash
-    partitioning on station_name satisfies every downstream grouping's
-    clustered distribution. At 100 TB nothing after shuffle 2 moves data.
-
-    ``existing_cond``/``delta_cond`` must be disjoint boolean Columns.
-    Output values are identical to ``dock_merge(existing, delta)`` with
-    station_data serialized as ``to_json(canonical_station_data(...))`` —
-    pinned by tests/test_operators.py
-    ::test_dock_merge_fused_json_equals_two_pipeline.
-    """
-    tagged = trips.withColumn(
-        "side", F.when(delta_cond, "d").when(existing_cond, "e")
-    ).filter(F.col("side").isNotNull())
-    monthly = dock_monthly(tagged, extra_keys=("side",)).repartition(
-        "station_name"
-    )
-
-    d = F.col("side") == "d"
-    e = F.col("side") == "e"
-
-    def _smax(cond, col):
-        return F.max(F.when(cond, F.col(col)))
-
-    attrs = ("station_id", "station_latitude", "station_longitude")
-    mrow = F.struct("month_total", "month_starts", "month_ends")
-    month_grain = monthly.groupBy("station_name", "year", "month").agg(
-        F.coalesce(
-            F.max(F.when(d, mrow)), F.max(F.when(e, mrow))
-        ).alias("mrow"),
-        _smax(d, "month_starts").alias("d_ms"),
-        _smax(d, "month_ends").alias("d_me"),
-        _smax(e, "month_starts").alias("e_ms"),
-        _smax(e, "month_ends").alias("e_me"),
-        *[_smax(d, a).alias(f"d_{a}") for a in attrs],
-        *[_smax(e, a).alias(f"e_{a}") for a in attrs],
-    )
-
-    month_frag = F.concat(
-        F.lit('"'),
-        F.col("month"),
-        F.lit('":{"month_total":'),
-        F.col("mrow.month_total").cast("string"),
-        F.lit(',"month_starts":'),
-        F.col("mrow.month_starts").cast("string"),
-        F.lit(',"month_ends":'),
-        F.col("mrow.month_ends").cast("string"),
-        F.lit("}"),
-    )
-    year_grain = month_grain.groupBy("station_name", "year").agg(
-        F.array_join(F.sort_array(F.collect_list(month_frag)), ",").alias("mjs"),
-        # delta's yearly sums REPLACE existing's when delta has the year:
-        # sum() skips the NULLs of an absent side, so it is null exactly
-        # when that side has no month in this (station, year).
-        F.coalesce(F.sum("d_ms"), F.sum("e_ms")).cast("long").alias("year_starts"),
-        F.coalesce(F.sum("d_me"), F.sum("e_me")).cast("long").alias("year_ends"),
-        *[F.max(f"d_{a}").alias(f"d_{a}") for a in attrs],
-        *[F.max(f"e_{a}").alias(f"e_{a}") for a in attrs],
-    )
-
-    year_frag = F.concat(
-        F.lit('"'),
-        F.col("year"),
-        F.lit('":{"year_starts":'),
-        F.col("year_starts").cast("string"),
-        F.lit(',"year_ends":'),
-        F.col("year_ends").cast("string"),
-        F.lit(',"months":{'),
-        F.col("mjs"),
-        F.lit("}}"),
-    )
-    station = year_grain.groupBy("station_name").agg(
-        F.array_join(F.sort_array(F.collect_list(year_frag)), ",").alias("yjs"),
-        *[
-            F.coalesce(F.max(f"d_{a}"), F.max(f"e_{a}")).alias(a)
-            for a in attrs
-        ],
-    )
-    return station.select(
-        "station_name",
-        "station_id",
-        "station_latitude",
-        "station_longitude",
-        F.concat(F.lit("{"), F.col("yjs"), F.lit("}")).alias("station_data"),
-    )
 
 
 def _sort_entries_by_key(entries):

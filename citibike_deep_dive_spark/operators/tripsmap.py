@@ -9,12 +9,12 @@ Reference (citibike_data_process/table_updating/update_tripsmap.py):
 - UPDATE-add + anti-join INSERT into TripTable (J2/J4, :37-55)
 
 The table holds one row per route identity ``TRIP_KEYS`` = (year, start
-name, end name, rideable_type), so the merge is a 1:1 join. The top-k
+name, end name, rideable_type), so the merge is 1:1. The top-k
 delta is grouped at a finer grain (the coordinates too), so
 ``reduce_to_identity`` folds it to that identity before the merge:
 trip counts add, the earliest trip_time and the best rank win, and the
-coordinates are those of the variant with the most trips, ties going to
-the smallest (start lat, start lon, end lat, end lon). The reference
+coordinates are those of the best-ranked variant: the most trips, ties
+going to the smallest (start lat, start lon, end lat, end lon). The reference
 keeps whichever coordinates its ``GROUP BY`` row arrives with first,
 which is not deterministic.
 
@@ -103,38 +103,41 @@ def _top_trips_rank() -> Column:
             F.col("start_station_name"),
             F.col("end_station_name"),
             F.col("rideable_type"),
+            *COORD_COLS,
         )
     )
 
 
 def top_trips(aggregated: DataFrame, k: int = 30) -> DataFrame:
     """W1: top-k routes per year by trip_count, with deterministic
-    tiebreaks (the reference has none — SURVEY.md §4)."""
+    tiebreaks (the reference has none — SURVEY.md §4): start, end and
+    rideable_type, then the coordinates, so the rank is total."""
     return top_k_by_rank(aggregated, _top_trips_rank(), k)
 
 
 @functools.cache
-def _identity_exprs() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
-    # min over (-trip_count, coordinates): the most trips, then the
-    # smallest coordinates
-    pick = F.min(F.struct((-F.col("trip_count")).alias("n"), *COORD_COLS)).alias("pick")
-    aggs = (
+def _identity_aggs() -> tuple[Column, ...]:
+    # the best-ranked variant has the most trips, then the smallest
+    # coordinates (``_top_trips_rank``'s last tiebreaks)
+    return (
         F.sum("trip_count").alias("trip_count"),
         F.min("trip_time").alias("trip_time"),
         F.min("rn").alias("rn"),
-        pick,
+        *(F.min_by(c, "rn").alias(c) for c in COORD_COLS),
     )
-    out = tuple(F.col(f"pick.{c}").alias(c) if c in COORD_COLS else F.col(c) for c in GROUP_COLS)
-    return aggs, out + (F.col("trip_count"), F.col("trip_time"), F.col("rn"))
 
 
 def reduce_to_identity(top: DataFrame) -> DataFrame:
     """``top_trips``' rows folded to one per ``TRIP_KEYS`` identity, in
     the same column order: summed trip_count, earliest trip_time, best
-    rank, and the coordinates of the variant with the most trips (ties:
-    smallest start lat, start lon, end lat, end lon)."""
-    aggs, out = _identity_exprs()
-    return top.groupBy(*TRIP_KEYS).agg(*aggs).select(*out)
+    rank, and the coordinates of the best-ranked variant, the one with
+    the most trips (ties: smallest start lat, start lon, end lat, end
+    lon)."""
+    return (
+        top.groupBy(*TRIP_KEYS)
+        .agg(*_identity_aggs())
+        .select(*GROUP_COLS, "trip_count", "trip_time", "rn")
+    )
 
 
 def haversine_km(lat1: float, lon1: float, lat2: float, lon2: float) -> float:
@@ -330,26 +333,13 @@ def enrich_routes(
     return top.mapInPandas(run, schema=schema)
 
 
-# Legacy-era trips have no rideable_type. The merge matches a null type as
-# a value: it stands in for null during the join only.
-_NO_TYPE = "\u0000"
-
-
-def _type_as_value(df: DataFrame) -> DataFrame:
-    return df.withColumn("rideable_type", F.coalesce("rideable_type", F.lit(_NO_TYPE)))
-
-
 def tripsmap_update(existing: DataFrame | None, delta: DataFrame) -> DataFrame:
     """I3: additive merge on the route identity ``TRIP_KEYS`` (J2+J4,
-    update_tripsmap.py:37-55), a null rideable_type matching a null one.
-    ``delta`` must hold one row per identity (``reduce_to_identity``). The
-    result keeps the existing table's column order, so every write of the
-    table has one schema."""
+    update_tripsmap.py:37-55). Legacy-era trips have no rideable_type; the
+    merge matches a null key to a null one. ``delta`` must hold one row
+    per identity (``reduce_to_identity``). The result keeps the existing
+    table's column order, so every write of the table has one schema."""
     if existing is None:
         return delta
-    merged = additive_upsert(
-        _type_as_value(existing), _type_as_value(delta), keys=TRIP_KEYS, counters=["trip_count"]
-    )
-    return merged.select(*existing.columns).withColumn(
-        "rideable_type", F.nullif("rideable_type", F.lit(_NO_TYPE))
-    )
+    merged = additive_upsert(existing, delta, keys=TRIP_KEYS, counters=["trip_count"])
+    return merged.select(*existing.columns)

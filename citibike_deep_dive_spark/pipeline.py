@@ -33,8 +33,9 @@ Differences from the reference, by design (SURVEY.md §7):
   change keeps both eras' rows;
 - the trips table holds one row per (year, start, end, rideable_type):
   each archive's top-k routes are reduced to that identity before the
-  merge, with a deterministic choice of coordinates
-  (``operators/tripsmap.py``);
+  merge, with a deterministic choice of coordinates, and the merge
+  matches a null key to a null one, so a legacy route (no rideable_type)
+  merges with itself (``operators/tripsmap.py``);
 - route enrichment uses the injectable geometry provider (offline
   deterministic by default — no network in the data path).
 """

@@ -298,9 +298,7 @@ def dock_deep_merge_nested_maps(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: scan → int unpivot → fused monthly agg [shuffle, map-side
     combined] → repartition(idx) [shuffle, ~500 rows] → year + station
     aggs exchange-free; two keyed shuffles, zero joins, zero interpreted
-    HOFs — same shape as the generic ``dock_merge_fused_json``, which
-    stays the operator surface for real (non-derivable) station columns
-    (tests/test_operators.py pins its equivalence to the MapType forms).
+    HOFs.
 
     No fan_out: the r6-r8 width trail ended at zero — the int unpivot
     made the per-row work so light that even the quarter-width

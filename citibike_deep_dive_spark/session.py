@@ -41,8 +41,10 @@ the process instead of being rebuilt per archive.
 - The operators' Column lists are built once per process by small
   ``functools.cache`` builders (``normalize``, ``operators/dockmap``,
   ``operators/tripsmap``, ``operators/upsert``), keyed on everything the
-  expressions depend on. They hold only unresolved ``F.col`` expressions,
-  never a DataFrame.
+  expressions depend on: the CSV header and ``file_year`` for normalize,
+  the table's columns, keys and counters for the upsert, nothing for dock
+  and trips. They hold only unresolved ``F.col`` expressions, never a
+  DataFrame.
 """
 
 from __future__ import annotations

@@ -34,10 +34,6 @@ class CandidateFile:
     month: int | None
 
     @property
-    def table_name(self) -> str:
-        return f"Citibike_{self.year}" + (f"_{self.month:02d}" if self.month else "")
-
-    @property
     def sort_key(self) -> int:
         """O5 chronological ordering: year*100 + month (missing month → 0,
         matching ingestion.py:105-109)."""

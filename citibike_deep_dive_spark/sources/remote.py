@@ -23,8 +23,8 @@ Design notes:
 - Only the DRIVER downloads — the work list is a few thousand names and
   each zip lands on local disk for the executor-side extract/parse path.
   At 100 TB the archives would live in object storage and be read
-  directly by the cluster (sources/zips.read_zips_distributed); this mode
-  exists for parity with the reference's single-node fetch loop.
+  directly by the cluster; this mode exists for parity with the
+  reference's single-node fetch loop.
 """
 
 from __future__ import annotations

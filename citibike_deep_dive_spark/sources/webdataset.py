@@ -3,14 +3,12 @@ for large multimodal/LLM training corpora (a corpus is thousands of
 ``shard-%06d.tar`` files; each sample is a group of adjacent members
 sharing a basename: ``000123.jpg`` + ``000123.txt`` + ``000123.json``).
 
-Spark-first shape, mirroring the distributed zip path
-(``sources/zips.read_zips_distributed``): ``binaryFile`` ships each
-shard's bytes to an executor (never the driver), a pure-stdlib
-``tarfile`` walk explodes members inside an Arrow-batched
-``mapInPandas``, and sample regrouping is a plain pivot-style
-aggregation on (shard, key) — so at 100 TB every stage is
-embarrassingly parallel at shard granularity, exactly how WebDataset
-is meant to be consumed. No external library: ``tarfile`` is stdlib,
+Spark-first shape: ``binaryFile`` ships each shard's bytes to an
+executor (never the driver), a pure-stdlib ``tarfile`` walk explodes
+members inside an Arrow-batched ``mapInPandas``, and sample regrouping
+is a plain pivot-style aggregation on (shard, key) — so at 100 TB every
+stage is embarrassingly parallel at shard granularity, exactly how
+WebDataset is meant to be consumed. No external library: ``tarfile`` is stdlib,
 and samples come back as ordinary binary columns that chain straight
 into the multimodal operators (image_dimensions / audio_metadata /
 extract_features).

@@ -5,20 +5,12 @@ Reference: citibike_data_process/data_processing/ingestion/zip_processing.py
 members, recurse ONE level into nested ``.zip`` members; then Arrow CSV
 parse + concat (:10-25).
 
-Two Spark-first paths:
-
-1. ``extract_to_staging`` (default): driver-side unzip to a staging dir,
-   then one ``spark.read.csv`` per distinct header (``group_by_header``),
-   with the header, read by Python's ``csv`` module, as the schema, so no
-   inference job runs — the cluster parses CSVs in parallel with full
-   pushdown. Right for the reference's actual scale (one archive at a
-   time, each holding a handful of CSVs).
-
-2. ``read_zips_distributed``: ``binaryFile`` source + ``mapInPandas``
-   doing in-executor zipfile extraction — for the 100 TB case where
-   thousands of archives must be exploded cluster-side without a staging
-   hop. Each archive lands in one task; Spark's partition packing
-   (maxPartitionBytes) spreads archives across executors.
+Spark-first form: ``extract_to_staging`` unzips on the driver to a
+staging dir, then one ``spark.read.csv`` per distinct header
+(``group_by_header``) runs, with the header, read by Python's ``csv``
+module, as the schema, so no inference job runs — the cluster parses CSVs
+in parallel with full pushdown. Right for the reference's actual scale
+(one archive at a time, each holding a handful of CSVs).
 """
 
 from __future__ import annotations
@@ -28,8 +20,6 @@ import io
 import os
 import zipfile
 from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -61,7 +51,7 @@ def iter_csv_members(data: bytes, _depth: int = 0) -> Iterator[tuple[str, bytes]
 
 
 def extract_to_staging(zip_path: str, staging_dir: str) -> list[str]:
-    """S4 path 1: driver-side extraction of one archive into a staging
+    """S4: driver-side extraction of one archive into a staging
     directory; returns written CSV paths for ``spark.read.csv``. Members
     are numbered in archive order, since members in different folders
     (or nested zips) may share a basename."""
@@ -116,32 +106,3 @@ def read_staged_csvs(spark: SparkSession, paths: list[str]) -> DataFrame:
         raise ValueError(f"expected members with one header, got {len(headers)} headers")
     schema = T.StructType([T.StructField(c, T.StringType()) for c in headers.pop()])
     return spark.read.csv(paths, header=True, schema=schema)
-
-
-CSV_LINES_SCHEMA = T.StructType(
-    [
-        T.StructField("archive", T.StringType()),
-        T.StructField("member", T.StringType()),
-        T.StructField("csv", T.BinaryType()),
-    ]
-)
-
-
-def read_zips_distributed(spark: SparkSession, glob: str) -> DataFrame:
-    """S4 path 2: distributed extraction. Returns one row per CSV member
-    (archive, member, csv bytes); callers parse members with pandas
-    inside a second mapInPandas or write them to a staging location.
-
-    binaryFile keeps archive bytes off the driver entirely.
-    """
-    binary = spark.read.format("binaryFile").load(glob)
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                for name, payload in iter_csv_members(row.content):
-                    rows.append((row.path, name, payload))
-            yield pd.DataFrame(rows, columns=["archive", "member", "csv"])
-
-    return binary.select("path", "content").mapInPandas(explode, CSV_LINES_SCHEMA)

@@ -17,8 +17,8 @@ SF_DIR_ORACLE = "/root/testdata/sf0.001"  # parity tests run at the tiny sf
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
-        "pipeline: the ingest pipeline's suite (sources, state, pipeline, plan reuse, "
-        "remote); run alone with `pytest -m pipeline tests/`",
+        "pipeline: the ingest pipeline's suite (sources, state, normalize, operators, "
+        "pipeline, plan reuse, remote); run alone with `pytest -m pipeline tests/`",
     )
 
 

@@ -1,11 +1,14 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from citibike_deep_dive_spark.normalize import normalize_trips
 from citibike_deep_dive_spark.schema import CANONICAL_COLUMNS
 
 from tests.trips_fixture import LAT_A, LAT_B, LON_A, LON_B, legacy_era_pdf, modern_era_pdf
+
+pytestmark = pytest.mark.pipeline
 
 
 def test_modern_era_normalization(spark):

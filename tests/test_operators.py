@@ -1,12 +1,12 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from citibike_deep_dive_spark.normalize import normalize_trips
 from citibike_deep_dive_spark.operators.dockmap import (
     dock_aggregate,
     dock_merge,
-    dock_merge_fused_json,
     dock_monthly,
 )
 from citibike_deep_dive_spark.operators.heatmap import heatmap_update
@@ -22,6 +22,8 @@ from citibike_deep_dive_spark.operators.tripsmap import (
 from citibike_deep_dive_spark.operators.upsert import additive_upsert
 
 from tests.trips_fixture import modern_era_pdf
+
+pytestmark = pytest.mark.pipeline
 
 
 def clean_trips(spark):
@@ -127,6 +129,9 @@ def test_route_enrichment_native_equals_pandas(spark):
         pandas_path = canon(enrich_routes(top, straight_line_geometry))
         assert native == pandas_path
         assert native  # non-empty
+
+
+def test_densify_matches_reference_extend_shape():
     """extend_shape parity (update_tripsmap.py:176-203): distances are
     computed with the reference's transposed lat/lon call, linspace
     INCLUDES endpoints, and the loop-exit append duplicates the last point
@@ -165,17 +170,19 @@ def test_reduce_to_identity_keeps_the_most_travelled_coordinates(spark):
             "start_station_longitude", "end_station_name", "end_station_latitude",
             "end_station_longitude", "rideable_type", "trip_count", "trip_time", "rn"]
     t1, t2 = datetime(2023, 7, 1, 8), datetime(2023, 7, 2, 9)
+    # rn orders each identity's variants as top_trips ranks them: trip_count
+    # descending, then the coordinates ascending
     top = spark.createDataFrame(
         [
             # most trips wins, whatever its coordinates
             ("2023", "A", 40.70, -73.90, "B", 40.80, -73.95, "classic_bike", 1, t1, 6),
             ("2023", "A", 40.75, -73.99, "B", 40.80, -73.95, "classic_bike", 3, t2, 1),
             # a tie: the smallest start latitude wins
-            ("2023", "A", 40.75, -73.99, "B", 40.80, -73.95, "electric_bike", 2, t2, 2),
-            ("2023", "A", 40.71, -74.00, "B", 40.80, -73.95, "electric_bike", 2, t1, 3),
+            ("2023", "A", 40.75, -73.99, "B", 40.80, -73.95, "electric_bike", 2, t2, 3),
+            ("2023", "A", 40.71, -74.00, "B", 40.80, -73.95, "electric_bike", 2, t1, 2),
             # a tie on start latitude: the smallest start longitude wins
-            ("2023", "B", 40.70, -73.98, "C", 40.80, -73.95, "classic_bike", 1, t1, 4),
-            ("2023", "B", 40.70, -73.99, "C", 40.80, -73.95, "classic_bike", 1, t1, 5),
+            ("2023", "B", 40.70, -73.98, "C", 40.80, -73.95, "classic_bike", 1, t1, 5),
+            ("2023", "B", 40.70, -73.99, "C", 40.80, -73.95, "classic_bike", 1, t1, 4),
         ],
         cols,
     )
@@ -192,6 +199,29 @@ def test_reduce_to_identity_keeps_the_most_travelled_coordinates(spark):
         ("A", "electric_bike"): (4, t1, 2, 40.71, -74.00),
         ("B", "classic_bike"): (2, t1, 4, 40.70, -73.99),
     }
+
+
+def test_top_trips_breaks_a_tie_between_coordinate_variants_by_coordinates(spark):
+    """Two coordinate variants of one route with equal trip_count tie on
+    every other rank key. Only one fits in k=1; the rank's last tiebreaks
+    are the coordinates, so the smaller variant survives, whichever comes
+    first in the input."""
+    from datetime import datetime
+
+    cols = ["year", "start_station_name", "start_station_latitude",
+            "start_station_longitude", "end_station_name", "end_station_latitude",
+            "end_station_longitude", "rideable_type", "trip_count", "trip_time"]
+    t = datetime(2023, 7, 1, 8)
+    agg = spark.createDataFrame(
+        [
+            ("2023", "A", 40.76, -73.90, "B", 40.80, -73.95, "classic_bike", 5, t),
+            ("2023", "A", 40.75, -73.99, "B", 40.80, -73.95, "classic_bike", 5, t),
+        ],
+        cols,
+    ).coalesce(1)
+    out = reduce_to_identity(top_trips(agg, k=1)).collect()
+    assert [(r.start_station_latitude, r.start_station_longitude, r.trip_count, r.rn)
+            for r in out] == [(40.75, -73.99, 5, 1)]
 
 
 def test_tripsmap_update(spark):
@@ -273,34 +303,3 @@ def test_dock_merge_month_union_new_wins(spark):
     assert months["Jan"].month_total == 5  # kept from old
     assert months["Feb"].month_total == 9  # new wins
     assert months["Mar"].month_total == 1  # added
-
-
-def test_dock_merge_fused_json_equals_two_pipeline(spark):
-    """The flat-merge JSON form the catalog carrier runs (merge at
-    relational grain, serialize via string fragments) is BYTE-identical to
-    to_json(canonical(...)) of the two-pipeline MapType merge."""
-    from citibike_deep_dive_spark.plans.advanced import (
-        _synth_dock_trips,
-        canonical_station_data,
-    )
-    from citibike_deep_dive_spark.plans.catalog import table
-
-    trips = _synth_dock_trips(table(spark, "/root/testdata/sf0.001", "orders"))
-    exist_pred = F.col("o_orderkey") % 3 != 0
-    delta_pred = (F.col("o_orderkey") % 3 == 0) & (F.col("year") >= "1999")
-
-    two_pipe = dock_merge(
-        dock_aggregate(trips.filter(exist_pred)),
-        dock_aggregate(trips.filter(delta_pred)),
-    )
-
-    def canon(df):
-        out = df.select(
-            "station_name", "station_id", "station_latitude",
-            "station_longitude",
-            F.to_json(canonical_station_data(F.col("station_data"))).alias("sd"),
-        )
-        return sorted(map(tuple, out.collect()))
-
-    flat = dock_merge_fused_json(trips, exist_pred, delta_pred)
-    assert sorted(map(tuple, flat.collect())) == canon(two_pipe)

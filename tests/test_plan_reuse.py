@@ -143,7 +143,7 @@ def _jobs(spark, group: str) -> int:
 def test_cache_fill_is_one_job(spark, tmp_path, monkeypatch):
     """Before its four rewrites start, a refresh archive has run one job,
     the ``noop`` write that fills the cache (no CSV schema inference, no
-    multi-job ``count``); the whole archive runs 16.
+    multi-job ``count``); the whole archive runs 15.
 
     Each rewrite thread records the group's job count when it first reads
     its table, before it launches a job itself, so the smallest record
@@ -169,7 +169,7 @@ def test_cache_fill_is_one_job(spark, tmp_path, monkeypatch):
     finally:
         spark.sparkContext._jsc.clearJobGroup()
     assert min(at_read) == 1
-    assert _jobs(spark, "fill") == 16
+    assert _jobs(spark, "fill") == 15
 
 
 # HotSpot never JIT-compiles a method of more bytecode (-XX:HugeMethodLimit).

@@ -163,16 +163,6 @@ def test_zip_extraction_nested_and_macosx():
     assert members["inner.csv"] == b"a,b\n1,2\n"
 
 
-def test_zip_distributed_read(spark, tmp_path):
-    from citibike_deep_dive_spark.sources.zips import read_zips_distributed
-
-    p = tmp_path / "a.zip"
-    p.write_bytes(_zip_bytes({"m1.csv": b"a,b\n1,2\n", "m2.csv": b"a,b\n3,4\n"}))
-    out = read_zips_distributed(spark, str(tmp_path / "*.zip")).collect()
-    assert sorted(r.member for r in out) == ["m1.csv", "m2.csv"]
-    assert all(r.csv.startswith(b"a,b") for r in out)
-
-
 def test_staged_members_sharing_a_basename_stay_apart(spark, tmp_path):
     """Members in different folders with one basename are staged as two
     files, so each month's rows are read exactly once."""
