@@ -27,7 +27,8 @@ Scale notes: the aggregation is two shuffles — one hash aggregation to
 (station, year, month) grain (map-side combined), one re-agg to station
 grain. The deep merge is a full outer join on station_name, which Spark
 plans as a sort-merge join: both sides shuffle on the key. Both hold one
-row per station, a few thousand rows.
+row per station, a few thousand rows. The pipeline feeds both the trips
+and the old table as one partition, so there none of these shuffles runs.
 """
 
 from __future__ import annotations

@@ -10,7 +10,9 @@ stable under the DuckDB-oracle hash check (SURVEY.md §4).
 Scale note: row_number over PARTITION BY year shuffles once on the group
 key; with thousands of groups this is the right plan. For tiny k and very
 hot groups, AQE's skew-join splitting plus the pre-aggregation (counts are
-already one row per group-key combo) keep partitions bounded.
+already one row per group-key combo) keep partitions bounded. The
+pipeline's trips rewrite runs it over one partition, which already holds
+its single year, so there it shuffles nothing.
 """
 
 from __future__ import annotations

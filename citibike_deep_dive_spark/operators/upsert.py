@@ -16,7 +16,8 @@ Scale notes:
   partitioning and nothing shuffles; otherwise one exchange moves both
   sides at once. A full outer join on null-safe (``<=>``) keys would
   shuffle even a side already partitioned on them, since Spark joins
-  such keys on ``(coalesce(k), isnull(k))``.
+  such keys on ``(coalesce(k), isnull(k))``. In the pipeline both sides
+  are one partition, which satisfies the grouping, so nothing shuffles.
 - With a lakehouse format (Delta/Iceberg) this same function's plan maps
   to MERGE INTO; on plain Parquet the caller rewrites the table
   (write temp dir + swap).

@@ -22,7 +22,17 @@ Differences from the reference, by design (SURVEY.md §7):
   after each, so the StatusData gate stays correct across partial runs;
 - within an archive the four table rewrites run concurrently, one driver
   thread each (none reads another's output), so Spark schedules their
-  jobs side by side; the state is saved only once all four succeeded;
+  jobs side by side; each thread plans its table's delta while the cache
+  fills and reads its old table once the fill is done; the state is saved
+  only once all four succeeded;
+- each rewrite reads the cached trips and its old table through
+  ``coalesce(1)``, so it runs as one job of one task with no shuffle: a
+  single partition satisfies every distribution the aggregates, the
+  year window and the merges require. That is safe because the tables
+  and the aggregated rows are driver-sized (above), and a monthly or
+  yearly archive holds one year, so the year window already ran in one
+  partition. The cache fill still reads and normalizes the CSVs in
+  parallel; the operators keep their distributed plans;
 - the state table is read and written on the driver with pyarrow;
 - a table is read with the Spark schema stored in its Parquet footer, so
   reading it plans without a schema-inference job;
@@ -48,7 +58,7 @@ import os
 import shutil
 import tempfile
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pyarrow.parquet as pq
@@ -124,26 +134,35 @@ def write_table(df: DataFrame, warehouse_dir: str, name: str) -> None:
     os.replace(tmp, final)
 
 
-def process_archive(
-    spark: SparkSession,
-    cand: CandidateFile,
-    staging_dir: str,
-    warehouse_dir: str,
-    top_k: int = 30,
-    geometry_provider: GeometryProvider | None = None,
-) -> None:
-    """Ingest one archive and merge it into all derived tables (the body
-    of the reference's per-file loop, main.py:62-76).
+@dataclass
+class _Staged:
+    """An archive extracted into its own staging subdirectory, with its
+    members read and normalized per header, unioned and cached."""
 
-    The archive is extracted into its own staging subdirectory, removed
-    at the end. Members are read and normalized per header, and the union
-    is cached by one ``noop`` write job; then each table's read → build →
-    write chain runs in its own thread. Every thread inherits the caller's
-    local properties (job group, scheduler pool). The first failure is
-    re-raised once all four threads have finished."""
-    prefix = os.path.basename(cand.name) + "."
-    with tempfile.TemporaryDirectory(prefix=prefix, dir=staging_dir) as stage:
-        groups = group_by_header(extract_to_staging(cand.name, stage))
+    stage: tempfile.TemporaryDirectory
+    trips: DataFrame
+
+    def fill(self) -> None:
+        """Fill the cache: one ``noop`` write job over the CSV members."""
+        self.trips.write.format("noop").mode("overwrite").save()
+
+    def release(self) -> None:
+        """Drop the cache and remove the staged CSVs."""
+        self.trips.unpersist()
+        self.stage.cleanup()
+
+
+def _stage(
+    spark: SparkSession, cand: CandidateFile, staging_dir: str, fill: bool = False
+) -> _Staged:
+    """Stage ``cand``, and with ``fill`` fill its cache too; if either
+    fails, nothing is left staged or cached."""
+    stage = tempfile.TemporaryDirectory(
+        prefix=os.path.basename(cand.name) + ".", dir=staging_dir
+    )
+    trips = None
+    try:
+        groups = group_by_header(extract_to_staging(cand.name, stage.name))
         if not groups:
             raise ValueError(f"{cand.name} holds no CSV member with a header")
         trips = functools.reduce(
@@ -153,35 +172,104 @@ def process_archive(
                 for paths in groups
             ],
         ).cache()
-        builders: dict[str, Callable[[DataFrame | None], DataFrame]] = {
-            "linegraph": lambda old: linegraph_update(old, trips),
-            "heatmap": lambda old: heatmap_update(old, trips),
-            "dock": lambda old: dock_merge(old, dock_aggregate(trips)),
-            "trips": lambda old: tripsmap_update(
-                old,
-                enrich_routes(
-                    reduce_to_identity(top_trips(trip_aggregate(trips), k=top_k)),
-                    geometry_provider,
-                ),
-            ),
-        }
-
-        def rewrite(name: str) -> None:
-            old = read_table(spark, warehouse_dir, name)
-            write_table(builders[name](old), warehouse_dir, name)
-
-        try:
-            trips.write.format("noop").mode("overwrite").save()
-            with ThreadPoolExecutor(max_workers=len(DERIVED_TABLES)) as pool:
-                # wrap once per thread: each gets its own copy of the properties
-                futures = [
-                    pool.submit(inheritable_thread_target(spark)(rewrite), name)
-                    for name in DERIVED_TABLES
-                ]
-                for f in futures:
-                    f.result()
-        finally:
+        staged = _Staged(stage, trips)
+        if fill:
+            staged.fill()
+        return staged
+    except BaseException:
+        if trips is not None:
             trips.unpersist()
+        stage.cleanup()
+        raise
+
+
+def process_archive(
+    spark: SparkSession,
+    cand: CandidateFile,
+    staging_dir: str,
+    warehouse_dir: str,
+    top_k: int = 30,
+    geometry_provider: GeometryProvider | None = None,
+    staged: _Staged | None = None,
+    following: CandidateFile | None = None,
+) -> _Staged | None:
+    """Ingest one archive and merge it into all derived tables (the body
+    of the reference's per-file loop, main.py:62-76).
+
+    The archive is extracted into its own staging subdirectory, removed
+    at the end. Members are read and normalized per header, and the union
+    is cached by one ``noop`` write job. Each table's chain runs in its own
+    thread, over a single partition: it plans the delta while that job
+    runs, then reads the old table, merges and writes. Every thread
+    inherits the caller's local properties (job group, scheduler pool).
+    The first failure, of the fill or of a rewrite, is re-raised once all
+    threads have finished.
+
+    ``staged`` is this archive as an earlier call returned it, staged with
+    its cache filled. Given ``following``, the next archive, the call
+    stages it and fills its cache once this archive's cache is filled, so
+    that fill runs beside this archive's rewrites, and returns it; the
+    caller passes it back with that archive or releases it. If staging it
+    fails, the call returns None, and that archive is staged again, and
+    fails, in its own call."""
+    prefilled = staged is not None
+    if staged is None:
+        staged = _stage(spark, cand, staging_dir)
+    one = staged.trips.coalesce(1)
+    # what each table merges with its old rows: the trips themselves,
+    # or an aggregate of them that is planned while the cache fills
+    deltas: dict[str, Callable[[], DataFrame]] = {
+        "linegraph": lambda: one,
+        "heatmap": lambda: one,
+        "dock": lambda: dock_aggregate(one),
+        "trips": lambda: enrich_routes(
+            reduce_to_identity(top_trips(trip_aggregate(one), k=top_k)),
+            geometry_provider,
+        ),
+    }
+    merges: dict[str, Callable[[DataFrame | None, DataFrame], DataFrame]] = {
+        "linegraph": linegraph_update,
+        "heatmap": heatmap_update,
+        "dock": dock_merge,
+        "trips": tripsmap_update,
+    }
+
+    def fill_cache() -> None:
+        if not prefilled:
+            staged.fill()
+
+    def rewrite(name: str) -> None:
+        delta = deltas[name]()
+        fill.result()
+        old = read_table(spark, warehouse_dir, name)
+        old = None if old is None else old.coalesce(1)
+        write_table(merges[name](old, delta), warehouse_dir, name)
+
+    def stage_following() -> _Staged:
+        fill.result()
+        return _stage(spark, following, staging_dir, fill=True)
+
+    ahead: Future | None = None
+    try:
+        with ThreadPoolExecutor(max_workers=2 + len(DERIVED_TABLES)) as pool:
+
+            def submit(fn: Callable, *args) -> Future:
+                # wrap per thread: each gets its own copy of the properties
+                return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+            fill = submit(fill_cache)
+            if following is not None:
+                ahead = submit(stage_following)
+            futures = [submit(rewrite, name) for name in DERIVED_TABLES]
+            for f in [fill, *futures]:
+                f.result()
+    except BaseException:
+        if ahead is not None and ahead.exception() is None:
+            ahead.result().release()
+        raise
+    finally:
+        staged.release()
+    return None if ahead is None or ahead.exception() else ahead.result()
 
 
 def ingest_new(
@@ -195,9 +283,10 @@ def ingest_new(
     fetch: Callable[[list[CandidateFile]], list[CandidateFile]] | None = None,
 ) -> PipelineResult:
     """Gate ``candidates`` on the state table and ingest the new ones in
-    order, saving the state after each. ``fetch`` maps the gated work list
-    to local archives (remote mode downloads them); by default the
-    candidates are local files already."""
+    order, saving the state after each. Each archive is staged, and its
+    cache filled, while the one before it rewrites the tables. ``fetch``
+    maps the gated work list to local archives (remote mode downloads
+    them); by default the candidates are local files already."""
     os.makedirs(warehouse_dir, exist_ok=True)
     state_path = state_path or os.path.join(warehouse_dir, "_state")
     staging_dir = staging_dir or os.path.join(warehouse_dir, "_staging")
@@ -205,19 +294,28 @@ def ingest_new(
 
     state = load_state(state_path)
     todo = new_files(candidates, state)
-    for cand in fetch(todo) if fetch else todo:
-        process_archive(
-            spark,
-            cand,
-            staging_dir,
-            warehouse_dir,
-            top_k=top_k,
-            geometry_provider=geometry_provider,
-        )
-        # advance + persist state after EVERY file (main.py:64-76 ordering)
-        # so a crash mid-run never reprocesses completed archives
-        state = advance_state(state, cand)
-        save_state(state, state_path)
+    archives = fetch(todo) if fetch else todo
+    staged = None
+    try:
+        for i, cand in enumerate(archives):
+            current, staged = staged, None
+            staged = process_archive(
+                spark,
+                cand,
+                staging_dir,
+                warehouse_dir,
+                top_k=top_k,
+                geometry_provider=geometry_provider,
+                staged=current,
+                following=archives[i + 1] if i + 1 < len(archives) else None,
+            )
+            # advance + persist state after EVERY file (main.py:64-76 ordering)
+            # so a crash mid-run never reprocesses completed archives
+            state = advance_state(state, cand)
+            save_state(state, state_path)
+    finally:
+        if staged is not None:
+            staged.release()
     return PipelineResult(processed=todo, skipped=len(candidates) - len(todo))
 
 

@@ -5,8 +5,8 @@ Reference: citibike_data_process/data_processing/ingestion/zip_processing.py
 members, recurse ONE level into nested ``.zip`` members; then Arrow CSV
 parse + concat (:10-25).
 
-Spark-first form: ``extract_to_staging`` unzips on the driver to a
-staging dir, then one ``spark.read.csv`` per distinct header
+Spark-first form: ``extract_to_staging`` streams each member on the
+driver into a staging dir, then one ``spark.read.csv`` per distinct header
 (``group_by_header``) runs, with the header, read by Python's ``csv``
 module, as the schema, so no inference job runs — the cluster parses CSVs
 in parallel with full pushdown. Right for the reference's actual scale
@@ -16,10 +16,12 @@ in parallel with full pushdown. Right for the reference's actual scale
 from __future__ import annotations
 
 import csv
-import io
 import os
+import shutil
+import tempfile
 import zipfile
 from collections.abc import Iterator
+from typing import IO
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -34,10 +36,15 @@ def _wanted(name: str) -> bool:
     )
 
 
-def iter_csv_members(data: bytes, _depth: int = 0) -> Iterator[tuple[str, bytes]]:
-    """Yield (member_name, csv_bytes) from an archive, recursing one level
-    into nested zips (zip_processing.py:48-84)."""
-    with zipfile.ZipFile(io.BytesIO(data)) as zf:
+def iter_csv_members(
+    archive: str | IO[bytes], spool_dir: str | None = None, _depth: int = 0
+) -> Iterator[tuple[str, IO[bytes]]]:
+    """Yield (member_name, open member) for each CSV member of ``archive``
+    (a path or a seekable binary file), recursing one level into nested
+    zips (zip_processing.py:48-84). A member stays open until the next one
+    is yielded. A nested zip is spooled to a file in ``spool_dir`` and
+    opened from there, so no member is ever held in memory whole."""
+    with zipfile.ZipFile(archive) as zf:
         for info in zf.infolist():
             if info.is_dir():
                 continue
@@ -45,24 +52,28 @@ def iter_csv_members(data: bytes, _depth: int = 0) -> Iterator[tuple[str, bytes]
             if name.startswith("__MACOSX") or os.path.basename(name).startswith("."):
                 continue
             if _wanted(name):
-                yield name, zf.read(info)
+                with zf.open(info) as member:
+                    yield name, member
             elif name.lower().endswith(".zip") and _depth == 0:
-                yield from iter_csv_members(zf.read(info), _depth=1)
+                with tempfile.TemporaryFile(dir=spool_dir) as spool:
+                    with zf.open(info) as member:
+                        shutil.copyfileobj(member, spool)
+                    spool.seek(0)
+                    yield from iter_csv_members(spool, spool_dir, _depth=1)
 
 
 def extract_to_staging(zip_path: str, staging_dir: str) -> list[str]:
     """S4: driver-side extraction of one archive into a staging
     directory; returns written CSV paths for ``spark.read.csv``. Members
     are numbered in archive order, since members in different folders
-    (or nested zips) may share a basename."""
+    (or nested zips) may share a basename. Each member is copied in
+    chunks, so the driver's memory does not grow with the archive."""
     os.makedirs(staging_dir, exist_ok=True)
     out = []
-    with open(zip_path, "rb") as fh:
-        data = fh.read()
-    for i, (name, payload) in enumerate(iter_csv_members(data)):
+    for i, (name, member) in enumerate(iter_csv_members(zip_path, staging_dir)):
         dest = os.path.join(staging_dir, f"{i:04d}-{os.path.basename(name)}")
         with open(dest, "wb") as fh:
-            fh.write(payload)
+            shutil.copyfileobj(member, fh)
         out.append(dest)
     return out
 

@@ -229,6 +229,61 @@ def test_failed_rewrite_reraises_and_keeps_state(spark, tmp_path, monkeypatch):
     assert len(run_pipeline(spark, str(d), wh, top_k=5).processed) == 1
 
 
+def test_failed_cache_fill_reraises_and_writes_no_table(spark, tmp_path, monkeypatch):
+    """The rewrites plan their deltas while the cache fills; a fill that
+    fails stops the archive before any of them reads or writes a table,
+    with the error surfaced, the state kept and the trips cache released."""
+    d = tmp_path / "inbox"
+    d.mkdir()
+    _write_modern(d)
+    wh = str(tmp_path / "warehouse")
+    normalize = pipeline.normalize_trips
+
+    def failing(raw, file_year):
+        trips = normalize(raw, file_year=file_year)
+        return trips.withColumn("fails", F.raise_error(F.lit("cache fill failed")))
+
+    reads = []
+    read = pipeline.read_table
+
+    def recording(spark_, warehouse_dir, name):
+        reads.append(name)
+        return read(spark_, warehouse_dir, name)
+
+    persisted = _persisted_rdds(spark)
+    monkeypatch.setattr(pipeline, "normalize_trips", failing)
+    monkeypatch.setattr(pipeline, "read_table", recording)
+    with pytest.raises(Exception, match="cache fill failed"):
+        run_pipeline(spark, str(d), wh, top_k=5)
+    assert reads == []
+    assert _persisted_rdds(spark) == persisted
+    assert load_state(os.path.join(wh, "_state")) == {}
+    assert [t for t in DERIVED_TABLES if os.path.exists(os.path.join(wh, t))] == []
+
+    monkeypatch.undo()
+    assert len(run_pipeline(spark, str(d), wh, top_k=5).processed) == 1
+
+
+def test_unreadable_next_archive_fails_in_its_own_turn(spark, tmp_path):
+    """The next archive is staged while the one before it rewrites the
+    tables. One that cannot be staged fails only in its own turn: the
+    archive before it is merged and its state saved, and nothing is left
+    staged or cached."""
+    d = tmp_path / "inbox"
+    d.mkdir()
+    _write_legacy(d)
+    with zipfile.ZipFile(d / "202307-citibike-tripdata.csv.zip", "w") as z:
+        z.writestr("readme.txt", "no trips here")
+    wh = str(tmp_path / "warehouse")
+    persisted = _persisted_rdds(spark)
+    with pytest.raises(ValueError, match="202307-citibike-tripdata.csv.zip"):
+        run_pipeline(spark, str(d), wh, top_k=5)
+    assert sorted(load_state(os.path.join(wh, "_state"))) == [2019]
+    assert all(read_table(spark, wh, t) is not None for t in DERIVED_TABLES)
+    assert _persisted_rdds(spark) == persisted
+    assert os.listdir(os.path.join(wh, "_staging")) == []
+
+
 def test_table_writes_inherit_the_job_group(spark, inbox, tmp_path, monkeypatch):
     """Jobs the rewrite threads launch belong to the caller's job group,
     so it can cancel or attribute them."""

@@ -143,7 +143,7 @@ def _jobs(spark, group: str) -> int:
 def test_cache_fill_is_one_job(spark, tmp_path, monkeypatch):
     """Before its four rewrites start, a refresh archive has run one job,
     the ``noop`` write that fills the cache (no CSV schema inference, no
-    multi-job ``count``); the whole archive runs 15.
+    multi-job ``count``); the whole archive runs 5, one more per table.
 
     Each rewrite thread records the group's job count when it first reads
     its table, before it launches a job itself, so the smallest record
@@ -169,7 +169,50 @@ def test_cache_fill_is_one_job(spark, tmp_path, monkeypatch):
     finally:
         spark.sparkContext._jsc.clearJobGroup()
     assert min(at_read) == 1
-    assert _jobs(spark, "fill") == 15
+    assert _jobs(spark, "fill") == 5
+
+
+def test_no_rewrite_shuffles(spark, tmp_path, monkeypatch):
+    """Every table rewrite, the first archive's and a merge's, reads the
+    cached trips and its old table as one partition, so its executed plan
+    holds no exchange."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    wh = str(tmp_path / "warehouse")
+    plans = []
+    write = pipeline.write_table
+
+    def recording(df, warehouse_dir, name):
+        write(df, warehouse_dir, name)
+        plans.append((name, df._jdf.queryExecution().executedPlan().toString()))
+
+    monkeypatch.setattr(pipeline, "write_table", recording)
+    for month in (7, 8):
+        _write_month(inbox, month)
+        assert len(run_pipeline(spark, str(inbox), wh, top_k=5).processed) == 1
+    assert sorted(name for name, _ in plans) == sorted(DERIVED_TABLES * 2)
+    for name, plan in plans:
+        assert "Exchange" not in plan, (name, plan)
+
+
+def test_cache_fill_reads_members_in_parallel(spark, tmp_path):
+    """The job that fills the cache parses an archive's two members in
+    more than one task: the rewrites' single partition never reaches the
+    per-row parse and normalize."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    with zipfile.ZipFile(inbox / "2023-citibike-tripdata.zip", "w") as z:
+        for month in (7, 8):
+            csv = modern_era_pdf().to_csv(index=False)
+            z.writestr(f"2023{month:02d}-citibike-tripdata.csv", csv)
+    tracker = spark.sparkContext.statusTracker()
+    spark.sparkContext.setJobGroup("parallel-fill", "cache fill parallelism test")
+    try:
+        assert len(run_pipeline(spark, str(inbox), str(tmp_path / "wh"), top_k=5).processed) == 1
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    fill = tracker.getJobInfo(min(tracker.getJobIdsForGroup("parallel-fill")))
+    assert sum(tracker.getStageInfo(s).numTasks for s in fill.stageIds) > 1
 
 
 # HotSpot never JIT-compiles a method of more bytecode (-XX:HugeMethodLimit).

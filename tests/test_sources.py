@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import io
 import os
+import tracemalloc
 import zipfile
 
 import pytest
@@ -19,7 +20,7 @@ from citibike_deep_dive_spark.sources.state import (
     new_files,
     save_state,
 )
-from citibike_deep_dive_spark.sources.zips import iter_csv_members
+from citibike_deep_dive_spark.sources.zips import extract_to_staging, iter_csv_members
 
 pytestmark = pytest.mark.pipeline
 
@@ -158,15 +159,47 @@ def test_zip_extraction_nested_and_macosx():
             "readme.txt": b"nope",
         }
     )
-    members = dict(iter_csv_members(data))
+    members = {name: member.read() for name, member in iter_csv_members(io.BytesIO(data))}
     assert set(members) == {"top.csv", "inner.csv"}
     assert members["inner.csv"] == b"a,b\n1,2\n"
+
+
+def test_extraction_streams_each_member(tmp_path):
+    """Extraction holds no member in memory whole: an archive with a 24 MB
+    member and a nested zip is staged with a traced peak under 4 MB, and
+    each staged file holds exactly its member's bytes, numbered in archive
+    order."""
+    big = b"ride,started_at,station\n" + b"".join(
+        b"%d,2023-07-01 00:00:%02d,station %d\n" % (i, i % 60, i % 997) for i in range(800_000)
+    )
+    assert len(big) >= 20 << 20
+    small = b"a,b\n1,2\n"
+    zpath = tmp_path / "2023-citibike-tripdata.zip"
+    with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as z:
+        z.writestr("big.csv", big)
+        z.writestr("__MACOSX/big.csv", b"junk")
+        z.writestr("nested.zip", _zip_bytes({"inner.csv": big[: 4 << 20], ".x.csv": b"junk"}))
+        z.writestr("sub/big.csv", small)
+    expected = [("0000-big.csv", big), ("0001-inner.csv", big[: 4 << 20]), ("0002-big.csv", small)]
+
+    tracemalloc.start()
+    try:
+        staged = extract_to_staging(str(zpath), str(tmp_path / "staging"))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 4 << 20
+    got = []
+    for path in staged:
+        with open(path, "rb") as fh:
+            got.append((os.path.basename(path), fh.read()))
+    assert got == expected
 
 
 def test_staged_members_sharing_a_basename_stay_apart(spark, tmp_path):
     """Members in different folders with one basename are staged as two
     files, so each month's rows are read exactly once."""
-    from citibike_deep_dive_spark.sources.zips import extract_to_staging, read_staged_csvs
+    from citibike_deep_dive_spark.sources.zips import read_staged_csvs
 
     zpath = tmp_path / "2023-citibike-tripdata.zip"
     with zipfile.ZipFile(zpath, "w") as z:
