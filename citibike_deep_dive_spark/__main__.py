@@ -47,6 +47,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--top-k", type=int, default=30, help="routes enriched per year")
     p.add_argument("--cpus", default=None, help="local[] parallelism override")
     args = p.parse_args(argv)
+    if bool(args.s3_bucket) != bool(args.s3_key):
+        p.error("--s3-bucket and --s3-key must be given together")
+    if args.s3_bucket and not args.export_db:
+        p.error("--s3-bucket/--s3-key upload the --export-db file; give --export-db")
 
     from pyspark.sql import SparkSession
 
@@ -92,7 +96,7 @@ def main(argv: list[str] | None = None) -> int:
 
         tables = export_warehouse_to_duckdb(args.warehouse, args.export_db)
         print(f"exported {len(tables)} table(s) to {args.export_db}")
-        if args.s3_bucket and args.s3_key:
+        if args.s3_bucket:
             upload_file_to_s3(args.export_db, args.s3_bucket, args.s3_key)
             print(f"uploaded to s3://{args.s3_bucket}/{args.s3_key}")
 

@@ -165,8 +165,8 @@ def add_partition_columns(df: DataFrame) -> DataFrame:
 
 
 @functools.cache
-def _filter_condition(file_year: str | None) -> Column:
-    cond = (
+def _filter_condition(file_year: str) -> Column:
+    return (
         (F.col("start_station_name") != "")
         & (F.col("start_station_id") != "")
         & (F.col("start_station_latitude") != 0)
@@ -177,24 +177,22 @@ def _filter_condition(file_year: str | None) -> Column:
         & F.col("start_station_longitude").isNotNull()
         & F.col("end_station_latitude").isNotNull()
         & F.col("end_station_longitude").isNotNull()
+        & (F.date_format("start_time", "yyyy") == file_year)
     )
-    if file_year is not None:
-        cond = cond & (F.date_format("start_time", "yyyy") == file_year)
-    return cond
 
 
-def clean_filters(df: DataFrame, file_year: str | None = None) -> DataFrame:
+def clean_filters(df: DataFrame, file_year: str) -> DataFrame:
     """P6: multi-predicate load filter (db_importing.py:76-88), verbatim.
 
     - non-empty START station name/id (the reference does not require the
       end-side name/id to be non-empty), non-zero/non-null coordinates,
     - neither station name in the depot/test blacklist,
-    - rows whose start year matches the file's year (when given).
+    - rows whose start year matches the file's year.
     """
     return df.filter(_filter_condition(file_year))
 
 
-def normalize_trips(df: DataFrame, file_year: str | None = None) -> DataFrame:
+def normalize_trips(df: DataFrame, file_year: str) -> DataFrame:
     """Full ingestion transform: raw era-variant frame → clean canonical
     trips with derived (year, month) partition columns.
 

@@ -28,14 +28,14 @@ def top_k_per_group(
     group_by: Sequence[str],
     order_by: Sequence[Column],
     k: int,
-    rank_col: str = "rn",
 ) -> DataFrame:
-    """Keep the top ``k`` rows of each group under a deterministic order."""
+    """Keep the top ``k`` rows of each group under a deterministic order,
+    with their rank in an ``rn`` column."""
     w = Window.partitionBy(*group_by).orderBy(*order_by)
-    return top_k_by_rank(df, F.row_number().over(w), k, rank_col)
+    return top_k_by_rank(df, F.row_number().over(w), k)
 
 
-def top_k_by_rank(df: DataFrame, rank: Column, k: int, rank_col: str = "rn") -> DataFrame:
+def top_k_by_rank(df: DataFrame, rank: Column, k: int) -> DataFrame:
     """``top_k_per_group`` with the ranking Column built by the caller, so
     a caller that ranks the same way every time can build it once."""
-    return df.withColumn(rank_col, rank).filter(F.col(rank_col) <= k)
+    return df.withColumn("rn", rank).filter(F.col("rn") <= k)

@@ -18,31 +18,28 @@ going to the smallest (start lat, start lon, end lat, end lon). The reference
 keeps whichever coordinates its ``GROUP BY`` row arrives with first,
 which is not deterministic.
 
-X3 becomes an Arrow-batched ``mapInPandas`` with an injectable geometry
-provider. The default provider is the reference's *offline* fallback
-semantics made deterministic: straight-line interpolation between the
-endpoints with the same densification rule (haversine distance 0.2–0.37 km
-→ 2 intermediate points, >0.37 km → 4; coordinates rounded to 5 dp;
-synthetic timestamps start + i hours as seconds-of-day — :158-221). The
-Mapbox HTTP call is a pluggable provider so correctness never needs
-network; retries/batching live inside the UDF batch, replacing the
-reference's ThreadPoolExecutor (:101-106).
+X3 is native column math over the top-k rows: the reference's offline
+fallback (straight-line geometry between the endpoints, densified by the
+same rule: haversine distance 0.2–0.37 km → 2 points, >0.37 km → 4;
+coordinates rounded to 5 dp; synthetic timestamps start + i hours as
+seconds-of-day — :158-221), made deterministic. The reference's Mapbox
+Directions call (:100-155) is not reproduced, so no run needs the
+network. ``densify``, ``attach_timestamps`` and ``straight_line_geometry``
+are the Python port of ``extend_shape`` that the tests compare the native
+column against.
 
 The self-loop filter, aggregates, top-k ranking and native waypoints
 column do not depend on the archive, so each is built once per process
 (``functools.cache``).
 
 Scale: enrichment runs strictly AFTER the top-30-per-year gate (cost
-gating preserved, :94), so the pandas path only ever sees ~30×years rows.
+gating preserved, :94), so it only ever sees ~30×years rows.
 """
 
 from __future__ import annotations
 
 import functools
 import math
-from collections.abc import Callable, Iterator
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -153,7 +150,7 @@ def haversine_km(lat1: float, lon1: float, lat2: float, lon2: float) -> float:
 def straight_line_geometry(
     lat1: float, lon1: float, lat2: float, lon2: float
 ) -> list[list[float]]:
-    """Deterministic offline geometry provider: endpoint pair as [lon, lat]
+    """Deterministic offline geometry: the endpoint pair as [lon, lat]
     coordinates (the shape Mapbox Directions returns)."""
     return [[lon1, lat1], [lon2, lat2]]
 
@@ -217,23 +214,19 @@ def attach_timestamps(
     ]
 
 
-GeometryProvider = Callable[[float, float, float, float], list[list[float]]]
+def enrich_routes(top: DataFrame) -> DataFrame:
+    """X3: adds a ``waypoints`` ArrayType(Struct) column, the offline
+    straight-line geometry in native column expressions.
 
-
-def enrich_routes_native(top: DataFrame) -> DataFrame:
-    """X3 with the DEFAULT (offline straight-line) geometry, entirely in
-    native column expressions — no Python boundary at all.
-
-    The default provider's shape is always the two endpoints, so the
-    densify() semantics collapse to one segment: transposed-distance
-    (reference bug kept, see ``densify``), strict 0.2/0.37 km bands
-    choosing 0/2/4 linspace points, the loop-exit endpoint append, 5-dp
-    rounding, and start + i-hours timestamps wrapped to seconds-of-day.
-    ``transform``/``sequence`` build the ≤5-element waypoint array per
-    row; the input is already gated to top-k-per-year grain, so the
-    higher-order functions touch ~30×years rows. Replaces the r4
-    mapInPandas Arrow round-trip (~0.5 s fixed cost at sf0.1 — VERDICT r4
-    item 5); byte-equality with the pandas path is pinned by
+    The shape is always the two endpoints, so the ``densify`` semantics
+    collapse to one segment: transposed-distance (reference bug kept, see
+    ``densify``), strict 0.2/0.37 km bands choosing 0/2/4 linspace points,
+    the loop-exit endpoint append, 5-dp rounding, and start + i-hours
+    timestamps wrapped to seconds-of-day. ``transform``/``sequence`` build
+    the ≤5-element waypoint array per row; the input is already gated to
+    top-k-per-year grain, so the higher-order functions touch ~30×years
+    rows. Equality with the Python port (``densify`` over
+    ``straight_line_geometry``, then ``attach_timestamps``) is pinned by
     tests/test_operators.py. One divergence class, non-occurring on this
     grid: F.round is HALF_UP while Python's round is HALF_EVEN, which
     differs only on exact half-way ties at the 6th decimal.
@@ -288,49 +281,6 @@ def _native_waypoints() -> Column:
         ),
     )
     return waypoints.cast(WAYPOINTS_TYPE)
-
-
-def enrich_routes(
-    top: DataFrame, geometry_provider: GeometryProvider | None = None
-) -> DataFrame:
-    """X3: adds a ``waypoints`` ArrayType(Struct) column.
-
-    ``geometry_provider`` is injectable (Mapbox-shaped HTTP in
-    production) so tests are hermetic; an injected provider runs as an
-    Arrow-batched mapInPandas (the Python boundary is unavoidable for
-    HTTP). With no provider, the offline straight-line default runs as
-    pure native column expressions — see ``enrich_routes_native``.
-    """
-    if geometry_provider is None:
-        return enrich_routes_native(top)
-    provider = geometry_provider
-    schema = T.StructType(top.schema.fields + [T.StructField("waypoints", WAYPOINTS_TYPE)])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            waypoints = []
-            for row in pdf.itertuples(index=False):
-                coords = provider(
-                    row.start_station_latitude,
-                    row.start_station_longitude,
-                    row.end_station_latitude,
-                    row.end_station_longitude,
-                )
-                ts = row.trip_time
-                secs = float(
-                    ts.hour * 3600 + ts.minute * 60 + ts.second + ts.microsecond / 1e6
-                )
-                # an HTTP provider returns [] once retries are exhausted —
-                # the route row still lands, with no waypoints
-                # (update_tripsmap.py:148-153)
-                waypoints.append(
-                    attach_timestamps(densify(coords), secs) if coords else []
-                )
-            pdf = pdf.copy()
-            pdf["waypoints"] = waypoints
-            yield pdf
-
-    return top.mapInPandas(run, schema=schema)
 
 
 def tripsmap_update(existing: DataFrame | None, delta: DataFrame) -> DataFrame:

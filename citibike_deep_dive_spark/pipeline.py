@@ -46,8 +46,9 @@ Differences from the reference, by design (SURVEY.md §7):
   merge, with a deterministic choice of coordinates, and the merge
   matches a null key to a null one, so a legacy route (no rideable_type)
   merges with itself (``operators/tripsmap.py``);
-- route enrichment uses the injectable geometry provider (offline
-  deterministic by default — no network in the data path).
+- route enrichment is the reference's offline fallback, straight-line
+  geometry in native column expressions, for every run; the reference's
+  Mapbox Directions call is not reproduced, so no run needs the network.
 """
 
 from __future__ import annotations
@@ -71,7 +72,6 @@ from .operators.dockmap import dock_aggregate, dock_merge
 from .operators.heatmap import heatmap_update
 from .operators.linegraph import linegraph_update
 from .operators.tripsmap import (
-    GeometryProvider,
     enrich_routes,
     reduce_to_identity,
     top_trips,
@@ -189,7 +189,6 @@ def process_archive(
     staging_dir: str,
     warehouse_dir: str,
     top_k: int = 30,
-    geometry_provider: GeometryProvider | None = None,
     staged: _Staged | None = None,
     following: CandidateFile | None = None,
 ) -> _Staged | None:
@@ -223,8 +222,7 @@ def process_archive(
         "heatmap": lambda: one,
         "dock": lambda: dock_aggregate(one),
         "trips": lambda: enrich_routes(
-            reduce_to_identity(top_trips(trip_aggregate(one), k=top_k)),
-            geometry_provider,
+            reduce_to_identity(top_trips(trip_aggregate(one), k=top_k))
         ),
     }
     merges: dict[str, Callable[[DataFrame | None, DataFrame], DataFrame]] = {
@@ -279,7 +277,6 @@ def ingest_new(
     state_path: str | None = None,
     staging_dir: str | None = None,
     top_k: int = 30,
-    geometry_provider: GeometryProvider | None = None,
     fetch: Callable[[list[CandidateFile]], list[CandidateFile]] | None = None,
 ) -> PipelineResult:
     """Gate ``candidates`` on the state table and ingest the new ones in
@@ -305,7 +302,6 @@ def ingest_new(
                 staging_dir,
                 warehouse_dir,
                 top_k=top_k,
-                geometry_provider=geometry_provider,
                 staged=current,
                 following=archives[i + 1] if i + 1 < len(archives) else None,
             )
@@ -326,7 +322,6 @@ def run_pipeline(
     state_path: str | None = None,
     staging_dir: str | None = None,
     top_k: int = 30,
-    geometry_provider: GeometryProvider | None = None,
 ) -> PipelineResult:
     """Discover archives in ``input_dir``, ingest only the state-gated new
     ones, maintain the derived tables under ``warehouse_dir``. Idempotent:
@@ -338,5 +333,4 @@ def run_pipeline(
         state_path,
         staging_dir,
         top_k=top_k,
-        geometry_provider=geometry_provider,
     )

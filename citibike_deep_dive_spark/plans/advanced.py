@@ -384,7 +384,7 @@ def dock_deep_merge_nested_maps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# §2.9 X3 — route waypoint enrichment (mapInPandas, offline geometry)
+# §2.9 X3 — route waypoint enrichment (native columns, offline geometry)
 # reference: citibike_data_process/table_updating/update_tripsmap.py:100-221
 # ---------------------------------------------------------------------------
 

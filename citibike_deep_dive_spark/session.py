@@ -15,8 +15,8 @@ Scale notes (100 TB target):
   reference's naive ``pa.timestamp("ns")`` columns
   (citibike_data_process/data_processing/setup/clean_up.py:21-22) and the
   DuckDB oracle.
-- ``spark.sql.session.timeZone=UTC`` + Arrow execution for the few
-  pandas-UDF edges.
+- ``spark.sql.session.timeZone=UTC`` + Arrow execution for the
+  catalog's few pandas-UDF edges.
 
 Per-archive fixed cost: a refresh repeats the same plan shapes for every
 archive, so generated code and built expressions are kept for the life of
@@ -95,7 +95,8 @@ def get_spark(
         # and plans use functions/timeutil.ts_micros for epoch arithmetic
         # so they are immune to both the reader flavor and this timezone.
         .config("spark.sql.session.timeZone", "UTC")
-        # Arrow for the pandas-UDF edges (route enrichment, multimodal).
+        # Arrow for the catalog's pandas-UDF edges (multimodal) and for
+        # toPandas; the pipeline itself runs no pandas UDF.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

@@ -22,16 +22,13 @@ from collections.abc import Callable
 import duckdb
 
 
-def export_warehouse_to_duckdb(
-    warehouse_dir: str, db_path: str, tables: list[str] | None = None
-) -> list[str]:
+def export_warehouse_to_duckdb(warehouse_dir: str, db_path: str) -> list[str]:
     """Materialize each parquet table under ``warehouse_dir`` as a table in
     a DuckDB file (CREATE OR REPLACE — idempotent re-export)."""
-    if tables is None:
-        tables = sorted(
-            d for d in os.listdir(warehouse_dir)
-            if os.path.isdir(os.path.join(warehouse_dir, d)) and not d.startswith("_")
-        )
+    tables = sorted(
+        d for d in os.listdir(warehouse_dir)
+        if os.path.isdir(os.path.join(warehouse_dir, d)) and not d.startswith("_")
+    )
     if os.path.exists(db_path):
         os.remove(db_path)
     con = duckdb.connect(db_path)

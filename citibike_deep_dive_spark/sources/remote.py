@@ -125,7 +125,6 @@ def run_remote_pipeline(
     staging_dir: str | None = None,
     download_dir: str | None = None,
     top_k: int = 30,
-    geometry_provider=None,
     http_get: HttpGet | None = None,
     workers: int = 5,
     backoff: float = 2.0,
@@ -151,6 +150,5 @@ def run_remote_pipeline(
         state_path,
         staging_dir,
         top_k=top_k,
-        geometry_provider=geometry_provider,
         fetch=fetch,
     )

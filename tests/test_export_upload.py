@@ -6,6 +6,7 @@ half already has the local-HTTP pattern in test_remote.py)."""
 from __future__ import annotations
 
 import os
+import zipfile
 
 import pytest
 
@@ -16,6 +17,8 @@ except ImportError:  # pragma: no cover - environment-dependent
     pytest.skip("boto3/moto not installed", allow_module_level=True)
 
 from citibike_deep_dive_spark.sources.export import upload_file_to_s3
+
+from tests.trips_fixture import modern_era_pdf
 
 BUCKET = "tripdata-artifacts"
 
@@ -60,3 +63,28 @@ def test_upload_small_file_single_part(s3_env, tmp_path):
     upload_file_to_s3(str(src), BUCKET, "exports/tiny.db")
     body = s3_env.get_object(Bucket=BUCKET, Key="exports/tiny.db")["Body"].read()
     assert body == b"duckdb-artifact"
+
+
+@pytest.mark.pipeline
+def test_cli_uploads_the_exported_db(s3_env, spark, tmp_path):
+    """``--export-db`` with ``--s3-bucket``/``--s3-key`` uploads the
+    DuckDB file the run exported, byte for byte."""
+    from citibike_deep_dive_spark.__main__ import main
+
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    with zipfile.ZipFile(inbox / "202307-citibike-tripdata.csv.zip", "w") as z:
+        z.writestr("202307-citibike-tripdata.csv", modern_era_pdf().to_csv(index=False))
+    db = tmp_path / "CitibikeData.db"
+    rc = main(
+        [
+            "--input-dir", str(inbox),
+            "--warehouse", str(tmp_path / "wh"),
+            "--export-db", str(db),
+            "--s3-bucket", BUCKET,
+            "--s3-key", "exports/CitibikeData.db",
+        ]
+    )
+    assert rc == 0
+    body = s3_env.get_object(Bucket=BUCKET, Key="exports/CitibikeData.db")["Body"].read()
+    assert body == db.read_bytes()

@@ -12,9 +12,11 @@ from citibike_deep_dive_spark.operators.dockmap import (
 from citibike_deep_dive_spark.operators.heatmap import heatmap_update
 from citibike_deep_dive_spark.operators.linegraph import linegraph_aggregate
 from citibike_deep_dive_spark.operators.tripsmap import (
+    attach_timestamps,
     densify,
     enrich_routes,
     reduce_to_identity,
+    straight_line_geometry,
     top_trips,
     trip_aggregate,
     tripsmap_update,
@@ -83,38 +85,15 @@ def test_route_enrichment_offline(spark):
         assert wps[1].timestamp == (wps[0].timestamp + 3600) % 86400
 
 
-def test_route_enrichment_keeps_rows_a_provider_has_no_shape_for(spark):
-    """A provider that returns [] (an HTTP provider out of retries) still
-    lands every route row, with empty waypoints, through the mapInPandas
-    path (update_tripsmap.py:148-153)."""
-
-    def no_shape(lat1, lon1, lat2, lon2):
-        return []
-
-    top = top_trips(trip_aggregate(clean_trips(spark)), k=2)
-    rows = enrich_routes(top, no_shape).collect()
-    assert len(rows) == top.count() == 2
-    assert all(r.waypoints == [] for r in rows)
-
-
 def test_route_enrichment_native_equals_pandas(spark):
-    """The r5 native-column default path must stay byte-identical (via
-    to_json) to the mapInPandas + straight_line_geometry path it
-    replaced, on both the fixture trips (mixed densify bands) and the
-    synthesized route-query data (all >0.37 km → 4-point branch)."""
-    from citibike_deep_dive_spark.operators.tripsmap import (
-        enrich_routes_native,
-        straight_line_geometry,
-    )
+    """The native waypoints column equals the Python port of the
+    reference's offline fallback (``straight_line_geometry``, ``densify``,
+    ``attach_timestamps``) computed over the same rows read as pandas, on
+    both the fixture trips (mixed densify bands) and the synthesized
+    route-query data (all >0.37 km → 4-point branch). ``toPandas`` gives
+    trip_time in the session time zone (UTC)."""
     from citibike_deep_dive_spark.plans.advanced import _synth_dock_trips
     from citibike_deep_dive_spark.plans.catalog import table
-
-    def canon(df):
-        out = df.select(
-            "year", "start_station_name", "end_station_name",
-            F.to_json("waypoints").alias("wp"),
-        )
-        return sorted(map(tuple, out.collect()))
 
     tops = [top_trips(trip_aggregate(clean_trips(spark)), k=5)]
     synth = _synth_dock_trips(
@@ -125,10 +104,25 @@ def test_route_enrichment_native_equals_pandas(spark):
     tops.append(top_trips(trip_aggregate(synth), k=5))
 
     for top in tops:
-        native = canon(enrich_routes_native(top))
-        pandas_path = canon(enrich_routes(top, straight_line_geometry))
-        assert native == pandas_path
-        assert native  # non-empty
+        pdf = enrich_routes(top).toPandas()
+        assert len(pdf)  # non-empty
+        for row in pdf.itertuples(index=False):
+            ts = row.trip_time
+            secs = float(
+                ts.hour * 3600 + ts.minute * 60 + ts.second + ts.microsecond / 1e6
+            )
+            coords = straight_line_geometry(
+                row.start_station_latitude,
+                row.start_station_longitude,
+                row.end_station_latitude,
+                row.end_station_longitude,
+            )
+            want = attach_timestamps(densify(coords), secs)
+            got = [
+                {"timestamp": w["timestamp"], "coordinates": list(w["coordinates"])}
+                for w in row.waypoints
+            ]
+            assert got == want, (row.start_station_name, row.end_station_name)
 
 
 def test_densify_matches_reference_extend_shape():

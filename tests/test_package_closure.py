@@ -2,15 +2,16 @@
 or is named below as reached only by its tests.
 
 The entry points are the CLI, the pipeline (local and remote), the DuckDB
-export, the session factory and the query catalog. A module none of them
-imports is dead code: delete it with its tests, or name it in
+export, the session factory and the query catalog. A module is reached
+when a reached module names it in any ``import`` or ``from`` statement,
+including one inside a function, so a module that a catalog entry
+imports only when it runs counts as reached. A module none of them
+reaches is dead code: delete it with its tests, or name it in
 ``TEST_ONLY`` so the dead weight stays visible."""
 
 from __future__ import annotations
 
-import json
-import subprocess
-import sys
+import ast
 from pathlib import Path
 
 import citibike_deep_dive_spark
@@ -18,18 +19,10 @@ import citibike_deep_dive_spark
 PACKAGE = "citibike_deep_dive_spark"
 ROOTS = ("__main__", "pipeline", "sources.remote", "sources.export", "session", "plans")
 
-# Modules no entry point imports; only their own tests do.
+# Modules no entry point reaches; only their own tests import them.
 TEST_ONLY = {
     f"{PACKAGE}.{m}"
     for m in (
-        "functions.md5vec",
-        "functions.stats",
-        "operators.asof",
-        "operators.codecs",
-        "operators.corpus",
-        "operators.geometry",
-        "operators.sampling",
-        "operators.skew",
         "sources.formats",
         "sources.webdataset",
         "streaming",
@@ -38,35 +31,58 @@ TEST_ONLY = {
     )
 }
 
-_PROBE = f"""
-import importlib, json, sys
-for root in {ROOTS!r}:
-    importlib.import_module("{PACKAGE}." + root)
-print(json.dumps(sorted(m for m in sys.modules if m.split(".")[0] == "{PACKAGE}")))
-"""
 
-
-def _package_modules() -> set[str]:
+def _package_modules() -> dict[str, Path]:
+    """Every module of the package, by dotted name, with its file."""
     pkg_dir = Path(citibike_deep_dive_spark.__file__).parent
-    out = set()
+    out = {}
     for path in pkg_dir.rglob("*.py"):
         parts = path.relative_to(pkg_dir.parent).with_suffix("").parts
         if parts[-1] == "__init__":
             parts = parts[:-1]
-        out.add(".".join(parts))
+        out[".".join(parts)] = path
     return out
 
 
+def _imported_names(module: str, path: Path) -> tuple[set[str], set[str]]:
+    """The modules that ``module``'s import statements load, and the
+    names they import from them (some of which are submodules)."""
+    package = module if path.name == "__init__.py" else module.rpartition(".")[0]
+    modules, names = set(), set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            modules.update(alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = package.split(".")[: len(package.split(".")) - node.level + 1]
+                target = ".".join(base + ([node.module] if node.module else []))
+            else:
+                target = node.module
+            modules.add(target)
+            names.update(f"{target}.{alias.name}" for alias in node.names)
+    return modules, names
+
+
+def _with_parents(module: str) -> set[str]:
+    """Importing ``a.b.c`` runs ``a`` and ``a.b`` too."""
+    parts = module.split(".")
+    return {".".join(parts[:i]) for i in range(1, len(parts) + 1)}
+
+
 def test_every_module_is_loaded_by_an_entry_point():
-    repo = Path(citibike_deep_dive_spark.__file__).parents[1]
-    proc = subprocess.run(
-        [sys.executable, "-c", _PROBE],
-        cwd=repo,
-        capture_output=True,
-        text=True,
-        check=True,
-    )
-    loaded = set(json.loads(proc.stdout.strip().splitlines()[-1]))
     files = _package_modules()
-    assert files - loaded == TEST_ONLY, "modules no entry point imports"
-    assert loaded - files == set(), "loaded modules with no file"
+    reached: set[str] = set()
+    missing: set[str] = set()
+    todo = [f"{PACKAGE}.{root}" for root in ROOTS]
+    while todo:
+        module = todo.pop()
+        if module in reached:
+            continue
+        reached.add(module)
+        modules, names = _imported_names(module, files[module])
+        ours = {m for m in modules if m.split(".")[0] == PACKAGE}
+        missing |= ours - files.keys()
+        for m in ours | names:
+            todo.extend(p for p in _with_parents(m) if p in files)
+    assert set(files) - reached == TEST_ONLY, "modules no entry point imports"
+    assert missing == set(), "imports of package modules with no file"

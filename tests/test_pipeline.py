@@ -360,6 +360,32 @@ def test_cli_main(inbox, tmp_path):
     ).fetchone()[0] > 0
 
 
+@pytest.mark.parametrize(
+    "flags",
+    [
+        ["--export-db", "out.db", "--s3-bucket", "B"],
+        ["--export-db", "out.db", "--s3-key", "K"],
+        ["--s3-bucket", "B", "--s3-key", "K"],
+    ],
+    ids=["bucket-only", "key-only", "no-export-db"],
+)
+def test_cli_rejects_s3_flags_it_would_ignore(flags, inbox, tmp_path, monkeypatch):
+    """An upload needs the bucket, the key and the exported file; the CLI
+    refuses any other combination before it builds a session."""
+    from citibike_deep_dive_spark import session
+    from citibike_deep_dive_spark.__main__ import main
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a session was built")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(SystemExit) as exc:
+        main(["--input-dir", inbox, "--warehouse", str(tmp_path / "wh"), *flags])
+    assert exc.value.code == 2
+    assert not (tmp_path / "wh").exists() and not (tmp_path / "out.db").exists()
+
+
 def test_parse_bucket_listing_xml():
     xml = (
         '<?xml version="1.0"?>'

@@ -102,6 +102,26 @@ def test_remote_pipeline_end_to_end_idempotent(bucket_server, spark, tmp_path):
     assert hits[f"/{ZIP_KEY}"] == 1, "already-ingested archive was re-downloaded"
 
 
+def test_cli_remote_mode_ingests_once(bucket_server, spark, tmp_path, capsys):
+    """``--remote-listing-url`` runs the remote flow: the archive is
+    downloaded and ingested once, and a rerun downloads nothing."""
+    from citibike_deep_dive_spark.__main__ import main
+
+    url, hits = bucket_server
+    wh = tmp_path / "warehouse"
+    argv = ["--remote-listing-url", url + "/", "--warehouse", str(wh)]
+
+    assert main(argv) == 0
+    assert "processed 1 new archive(s), skipped 0" in capsys.readouterr().out
+    assert hits[f"/{ZIP_KEY}"] == 1
+    assert (wh / "_downloads" / ZIP_KEY).exists()
+    assert spark.read.parquet(str(wh / "trips")).count() > 0
+
+    assert main(argv) == 0
+    assert "processed 0 new archive(s), skipped 1" in capsys.readouterr().out
+    assert hits[f"/{ZIP_KEY}"] == 1, "already-ingested archive was re-downloaded"
+
+
 def test_download_cache_short_circuits(bucket_server, tmp_path):
     url, hits = bucket_server
     d = str(tmp_path / "dl")

@@ -10,6 +10,7 @@ import pytest
 from citibike_deep_dive_spark.sources.discovery import (
     CandidateFile,
     discover_listing,
+    discover_local,
     is_candidate,
     parse_file_name,
 )
@@ -44,6 +45,23 @@ def test_listing_filters_and_order():
     files = discover_listing(keys)
     assert [f.sort_key for f in files] == [202300, 202312, 202402]
     assert not is_candidate("index.html")
+
+
+def test_local_discovery_filters_and_order(tmp_path):
+    for name in [
+        "202402-citibike-tripdata.csv.zip",
+        "JC-202402-citibike-tripdata.csv.zip",  # Jersey City: excluded
+        "index.html",
+        "2012-citibike-tripdata.zip",  # pre-2013: excluded
+        "citibike-tripdata-2023.zip",  # not the archive name pattern
+        "2023-citibike-tripdata.zip",
+    ]:
+        (tmp_path / name).write_bytes(b"")
+    files = discover_local(str(tmp_path))
+    assert files == [
+        CandidateFile(str(tmp_path / "2023-citibike-tripdata.zip"), 2023, None),
+        CandidateFile(str(tmp_path / "202402-citibike-tripdata.csv.zip"), 2024, 2),
+    ]
 
 
 def test_state_machine_gate():
