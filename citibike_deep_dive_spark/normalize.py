@@ -5,8 +5,8 @@ ingestion stages (SURVEY.md §1.3, §2.2):
 
 1. header/schema normalization — clean_up.py:44-74 (P1 rename, P2 null-pad,
    P3 project+cast),
-2. load-time repair + filters — db_importing.py:42-89 (P4 bbox coordinate
-   swap, F2/F3 user_type CASE, P5 derived year/month, P6 predicates).
+2. load-time filters + repair — db_importing.py:42-89 (P6 predicates on the
+   columns as loaded, then P4 bbox swap, F2/F3 user_type CASE, P5 year/month).
 
 Everything is native Column expressions: Catalyst pushes the P6 filters into
 the scan and the whole pipeline stays inside WholeStageCodegen — no Python
@@ -185,7 +185,10 @@ def clean_filters(df: DataFrame, file_year: str) -> DataFrame:
     """P6: multi-predicate load filter (db_importing.py:76-88), verbatim.
 
     - non-empty START station name/id (the reference does not require the
-      end-side name/id to be non-empty), non-zero/non-null coordinates,
+      end-side name/id to be non-empty), non-null coordinates,
+    - non-zero latitudes, read before the P4 swap as the reference's WHERE
+      reads ``temp_table``: a 0 longitude is kept and swapped into the
+      latitude (a reference quirk),
     - neither station name in the depot/test blacklist,
     - rows whose start year matches the file's year.
     """
@@ -204,7 +207,7 @@ def normalize_trips(df: DataFrame, file_year: str) -> DataFrame:
     """
     out = normalize_headers(df)
     out = conform_schema(out)
+    out = clean_filters(out, file_year=file_year)
     out = repair_coordinates(out)
     out = normalize_user_type(out)
-    out = clean_filters(out, file_year=file_year)
     return add_partition_columns(out)

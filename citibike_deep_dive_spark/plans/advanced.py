@@ -540,6 +540,23 @@ _NORMALIZE_ORACLE = f"""
                member_casual AS user_type,
                rideable_type
         FROM raw
+        -- P6 binds to these aliases, the columns before the P4 swap
+        WHERE start_station_name <> ''
+          AND start_station_id <> ''
+          AND start_station_latitude <> 0 AND end_station_latitude <> 0
+          AND start_station_name NOT IN (
+              '8D QC Station 01', 'SSP - Basement',
+              'NYCBS Depot - STY - Valet Scan',
+              '333 Johnson TEST 1', '8D Mobile 01', '8D OPS 01')
+          AND end_station_name NOT IN (
+              '8D QC Station 01', 'SSP - Basement',
+              'NYCBS Depot - STY - Valet Scan',
+              '333 Johnson TEST 1', '8D Mobile 01', '8D OPS 01')
+          AND start_station_latitude IS NOT NULL
+          AND start_station_longitude IS NOT NULL
+          AND end_station_latitude IS NOT NULL
+          AND end_station_longitude IS NOT NULL
+          AND strftime(start_time, '%Y') = '2024'
     ),
     -- P4: bbox-conditional un-swap (db_importing.py:45-71)
     repaired AS (
@@ -577,22 +594,6 @@ _NORMALIZE_ORACLE = f"""
            strftime(start_time, '%Y') AS year,
            strftime(start_time, '%b') AS month
     FROM repaired
-    WHERE start_station_name <> ''
-      AND start_station_id <> ''
-      AND start_station_latitude <> 0 AND end_station_latitude <> 0
-      AND start_station_name NOT IN (
-          '8D QC Station 01', 'SSP - Basement',
-          'NYCBS Depot - STY - Valet Scan',
-          '333 Johnson TEST 1', '8D Mobile 01', '8D OPS 01')
-      AND end_station_name NOT IN (
-          '8D QC Station 01', 'SSP - Basement',
-          'NYCBS Depot - STY - Valet Scan',
-          '333 Johnson TEST 1', '8D Mobile 01', '8D OPS 01')
-      AND start_station_latitude IS NOT NULL
-      AND start_station_longitude IS NOT NULL
-      AND end_station_latitude IS NOT NULL
-      AND end_station_longitude IS NOT NULL
-      AND strftime(start_time, '%Y') = '2024'
 """
 
 

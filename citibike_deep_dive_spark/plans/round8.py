@@ -110,9 +110,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dsir_doc_buckets(docs: DataFrame) -> DataFrame:
     """(doc_id, is_target, bucket, c): per-doc hashed-bigram bucket
-    counts — the only data-grain frame in the DSIR pipeline. Factored
-    out so the streaming form can compute per-micro-batch deltas with
-    the identical definition."""
+    counts — the only data-grain frame in the DSIR pipeline."""
     ws = F.split(F.lower("text"), " ")
     # zip_with over two shifted slices beats transform+slice+array_join
     # ~2x per-row (no per-bigram array allocation; measured at sf0.1)
@@ -146,8 +144,8 @@ def dsir_doc_buckets(docs: DataFrame) -> DataFrame:
 def dsir_model(bg: DataFrame) -> DataFrame:
     """(bucket, tc, rc): target and raw bucket totals. ADDITIVE across
     document slices — summing two slices' models equals the model of
-    their union — which is what makes the streaming form a plain
-    additive_upsert_sink on this grain (no re-scan of history)."""
+    their union — so an incremental form is a plain additive upsert on
+    this grain (no re-scan of history)."""
     return bg.groupBy("bucket").agg(
         F.sum(F.when(F.col("is_target"), F.col("c")).otherwise(0))
         .cast("long")
@@ -159,7 +157,7 @@ def dsir_model(bg: DataFrame) -> DataFrame:
 def dsir_weights(bg: DataFrame, model: DataFrame) -> DataFrame:
     """Per-doc importance log-weights from a (bucket, tc, rc) model —
     the model may come from the same frame (the catalog query) or from
-    an incrementally-maintained table (the streaming form)."""
+    an incrementally-maintained table."""
     scalars = model.agg(
         F.sum("tc").cast("double").alias("t_tot"),
         F.sum("rc").cast("double").alias("r_tot"),
@@ -293,9 +291,7 @@ _CHUNK_WORDS = 16
 def chunk_frame(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, chunk, digest): the fixed 16-word chunk fan-out —
     a narrow transform (sequence + slice + md5, zero Python, zero
-    shuffle). Shared by the batch reconstruct query and the streaming
-    first-seen chunk-dedup form (same definition, so a chunk hashed in
-    a stream matches one hashed in batch)."""
+    shuffle), used by the batch reconstruct query."""
     toks = docs.select("doc_id", F.split("text", " ").alias("w"))
     return toks.select(
         "doc_id",

@@ -1044,79 +1044,6 @@ def test_flac_through_audio_stats_operator(spark):
 
 
 # ---------------------------------------------------------------------------
-# End-to-end: WebDataset tar shards -> sample regroup -> REAL codec
-# decode (the realistic multimodal ingestion shape: shard on disk ->
-# binaryFile -> tar explode -> group -> decode -> stats, all
-# distributed, no codec libraries)
-# ---------------------------------------------------------------------------
-
-
-def test_webdataset_shard_to_codec_stats_end_to_end(spark, tmp_path):
-    import io
-    import tarfile
-
-    from citibike_deep_dive_spark.operators.codecs import (
-        decode_flac_samples,
-        decode_jpeg_pixels,
-        encode_flac,
-        encode_gif,
-        encode_jpeg,
-    )
-    from citibike_deep_dive_spark.operators.multimodal import (
-        decode_audio_samples,
-        extract_features,
-    )
-    from citibike_deep_dive_spark.sources.webdataset import (
-        group_samples,
-        read_tar_shards,
-    )
-
-    gif_px = _palette_image(10, 8, 16, seed=31)
-    jpg_src = _gradient(8, 8)
-    jpg_payload = encode_jpeg(jpg_src, quality=95)
-    audio = _sine(800)
-    flac_payload = encode_flac(audio, 16000)
-
-    buf = io.BytesIO()
-    with tarfile.open(fileobj=buf, mode="w") as tar:
-        for name, payload in (
-            ("000001.gif", encode_gif(gif_px)),
-            ("000001.flac", flac_payload),
-            ("000002.jpg", jpg_payload),
-            ("000002.txt", b"caption two"),
-        ):
-            info = tarfile.TarInfo(name)
-            info.size = len(payload)
-            tar.addfile(info, io.BytesIO(payload))
-    (tmp_path / "shard-000000.tar").write_bytes(buf.getvalue())
-
-    members = read_tar_shards(spark, f"{tmp_path}/*.tar")
-    samples = group_samples(members, ("gif", "jpg", "flac", "txt")).collect()
-    by_key = {r["key"]: r for r in samples}
-    assert set(by_key) == {"000001", "000002"}
-
-    # image payloads -> real pixel features through the media operator
-    media = _media_df(
-        spark,
-        [
-            (1, "image", bytearray(by_key["000001"]["gif"]), 8, 10, 0),
-            (2, "image", bytearray(by_key["000002"]["jpg"]), 8, 8, 0),
-        ],
-    )
-    feats = {r["media_id"]: r for r in extract_features(media).collect()}
-    assert feats[1]["features"] == _bmp_features(gif_px)
-    assert feats[2]["features"] == _bmp_features(
-        decode_jpeg_pixels(jpg_payload)
-    )
-
-    # audio payload -> bit-exact FLAC decode through the dispatcher
-    out, rate, _ = decode_audio_samples(bytes(by_key["000001"]["flac"]))
-    assert rate == 16000
-    assert np.array_equal(out.astype(np.int64), audio.astype(np.int64))
-    assert bytes(by_key["000002"]["txt"]) == b"caption two"
-
-
-# ---------------------------------------------------------------------------
 # Animated GIF (multi-frame decode with GCE compositing)
 # ---------------------------------------------------------------------------
 

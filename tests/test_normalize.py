@@ -129,3 +129,123 @@ def test_malformed_csv_rows_drop_deterministically(spark, tmp_path):
     assert len(rows) == 1
     assert rows[0]["start_station_name"] == "A St"
     assert rows[0]["user_type"] == "subscriber"  # F3 CASE normalization
+
+
+def _one_row(spark, pdf, **changes):
+    """The fixture's first row with ``changes`` applied, every column a
+    string or null, as ``read_staged_csvs`` hands it to normalize."""
+    row = pdf.iloc[0].to_dict() | changes
+    cols = list(row)
+    values = tuple(None if row[c] is None else str(row[c]) for c in cols)
+    return spark.createDataFrame([values], ", ".join(f"`{c}` string" for c in cols))
+
+
+_START = ("start_station_latitude", "start_station_longitude")
+_END = ("end_station_latitude", "end_station_longitude")
+
+
+@pytest.mark.parametrize(
+    "pdf, file_year, change, kept",
+    [
+        (legacy_era_pdf, "2019", {"Start Station Latitude": 0.0}, None),
+        (legacy_era_pdf, "2019", {"End Station Latitude": 0.0}, None),
+        (modern_era_pdf, "2023", {"start_lng": 0.0}, None),
+        (modern_era_pdf, "2023", {"end_lat": 0.0}, None),
+        (legacy_era_pdf, "2019", {"End Station Longitude": 0.0}, (_END, (0.0, LAT_B))),
+        (modern_era_pdf, "2023", {"start_lat": 0.0}, (_START, (0.0, LON_A))),
+        (modern_era_pdf, "2023", {"end_lng": 0.0}, (_END, (0.0, LAT_B))),
+    ],
+    ids=[
+        "legacy-start-lat",
+        "legacy-end-lat",
+        "modern-start_lng",
+        "modern-end_lat",
+        "legacy-end-lon",
+        "modern-start_lat",
+        "modern-end_lng",
+    ],
+)
+def test_zero_latitude_check_reads_the_columns_before_the_swap(
+    spark, pdf, file_year, change, kept
+):
+    """P6's ``!= 0`` checks bind to the loaded columns, before the P4 swap
+    (the reference's WHERE reads temp_table, not its SELECT's REPLACE).
+    A 0 in a checked column drops the row; a 0 in an unchecked one keeps
+    it, and the swap then moves the 0 into the latitude (a reference
+    quirk). Modern ``start_lng`` lands in the start latitude column."""
+    rows = normalize_trips(_one_row(spark, pdf(), **change), file_year=file_year).collect()
+    if kept is None:
+        assert rows == []
+    else:
+        (lat, lon), coords = kept
+        assert len(rows) == 1
+        assert (rows[0][lat], rows[0][lon]) == coords
+
+
+@pytest.mark.parametrize(
+    "change, rows",
+    [
+        ({"Start Station Name": "8D OPS 01"}, 0),
+        ({"End Station Name": "SSP - Basement"}, 0),
+        ({"Start Station Name": ""}, 0),
+        ({"Start Station ID": ""}, 0),
+        ({"Start Station Latitude": None}, 0),
+        ({"Start Station Longitude": None}, 0),
+        ({"End Station Latitude": None}, 0),
+        ({"End Station Longitude": None}, 0),
+        ({"Start Time": "7/1/2018 8:00:00"}, 0),
+        ({"Start Time": "2019-07-01T08:00"}, 0),
+        ({"End Station Name": ""}, 1),
+        ({"End Station ID": ""}, 1),
+    ],
+    ids=[
+        "blacklisted-start",
+        "blacklisted-end",
+        "empty-start-name",
+        "empty-start-id",
+        "null-start-lat",
+        "null-start-lon",
+        "null-end-lat",
+        "null-end-lon",
+        "wrong-year",
+        "unparseable-start-time",
+        "empty-end-name",
+        "empty-end-id",
+    ],
+)
+def test_each_p6_rule_alone(spark, change, rows):
+    """One good legacy row with one field changed. Each P6 predicate drops
+    it on its own; an empty END name or id does not (the reference checks
+    only the start side)."""
+    assert normalize_trips(_one_row(spark, legacy_era_pdf(), **change), "2019").count() == rows
+
+
+def test_iso_timestamp_keeps_its_milliseconds(spark):
+    rows = normalize_trips(
+        _one_row(spark, modern_era_pdf(), started_at="2023-07-01 08:00:00.123"), "2023"
+    ).collect()
+    assert len(rows) == 1
+    assert rows[0].start_time.isoformat() == "2023-07-01T08:00:00.123000"
+
+
+def test_swapped_end_pair_is_repaired(spark):
+    raw = _one_row(
+        spark, legacy_era_pdf(), **{"End Station Latitude": LON_B, "End Station Longitude": LAT_B}
+    )
+    rows = normalize_trips(raw, "2019").collect()
+    assert [(r.end_station_latitude, r.end_station_longitude) for r in rows] == [(LAT_B, LON_B)]
+
+
+def test_pair_outside_the_bbox_is_swapped_anyway(spark):
+    """P4 swaps any pair that is not inside the NYC box, even one that was
+    right and merely lies outside it (a reference quirk)."""
+    outside = {"Start Station Latitude": 42.0, "Start Station Longitude": -71.0}
+    raw = _one_row(spark, legacy_era_pdf(), **outside)
+    rows = normalize_trips(raw, "2019").collect()
+    assert [(r.start_station_latitude, r.start_station_longitude) for r in rows] == [(-71.0, 42.0)]
+
+
+def test_user_type_outside_the_map_is_lowercased(spark):
+    raw = _one_row(spark, legacy_era_pdf(), Usertype="Dependent")
+    rows = normalize_trips(raw, "2019").collect()
+    assert [r.user_type for r in rows] == ["dependent"]

@@ -10,7 +10,7 @@ from citibike_deep_dive_spark.operators.dockmap import (
     dock_monthly,
 )
 from citibike_deep_dive_spark.operators.heatmap import heatmap_update
-from citibike_deep_dive_spark.operators.linegraph import linegraph_aggregate
+from citibike_deep_dive_spark.operators.linegraph import linegraph_aggregate, linegraph_update
 from citibike_deep_dive_spark.operators.tripsmap import (
     attach_timestamps,
     densify,
@@ -39,6 +39,15 @@ def test_linegraph_aggregate(spark):
     assert (row.year, row.month) == ("2023", "Jul")
     assert row.subscriber_count == 2  # r1, r3
     assert row.customer_count == 2  # r2, r4 (self-loop still counts here)
+
+
+def test_linegraph_update_appends_a_month_already_present(spark):
+    """I4 appends each archive's counts: a (year, month) already in the
+    table gets a second row, not a sum. The state gate is the only guard
+    against a double append (a reference quirk)."""
+    trips = clean_trips(spark)
+    twice = linegraph_update(linegraph_update(None, trips), trips).collect()
+    assert [tuple(r) for r in twice] == [("2023", "Jul", 2, 2)] * 2
 
 
 def test_heatmap_update_merges_additively(spark):

@@ -1,13 +1,11 @@
-"""Guard: every module in the package is reached from its entry points,
-or is named below as reached only by its tests.
+"""Guard: every module in the package is reached from its entry points.
 
 The entry points are the CLI, the pipeline (local and remote), the DuckDB
 export, the session factory and the query catalog. A module is reached
 when a reached module names it in any ``import`` or ``from`` statement,
 including one inside a function, so a module that a catalog entry
 imports only when it runs counts as reached. A module none of them
-reaches is dead code: delete it with its tests, or name it in
-``TEST_ONLY`` so the dead weight stays visible."""
+reaches is dead code: delete it with its tests."""
 
 from __future__ import annotations
 
@@ -18,18 +16,6 @@ import citibike_deep_dive_spark
 
 PACKAGE = "citibike_deep_dive_spark"
 ROOTS = ("__main__", "pipeline", "sources.remote", "sources.export", "session", "plans")
-
-# Modules no entry point reaches; only their own tests import them.
-TEST_ONLY = {
-    f"{PACKAGE}.{m}"
-    for m in (
-        "sources.formats",
-        "sources.webdataset",
-        "streaming",
-        "streaming.ingest",
-        "streaming.stateful",
-    )
-}
 
 
 def _package_modules() -> dict[str, Path]:
@@ -84,5 +70,5 @@ def test_every_module_is_loaded_by_an_entry_point():
         missing |= ours - files.keys()
         for m in ours | names:
             todo.extend(p for p in _with_parents(m) if p in files)
-    assert set(files) - reached == TEST_ONLY, "modules no entry point imports"
+    assert set(files) - reached == set(), "modules no entry point imports"
     assert missing == set(), "imports of package modules with no file"

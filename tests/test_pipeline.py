@@ -3,6 +3,7 @@ main.py:23-83, and export artifact, export_data.py:24-31)."""
 
 from __future__ import annotations
 
+import json
 import os
 import zipfile
 
@@ -400,3 +401,117 @@ def test_parse_bucket_listing_xml():
         "JC-202301-citibike-tripdata.csv.zip",
         "index.html",
     ]
+
+
+def _order_invariant_view(spark, wh):
+    """The parts of the tables that must not depend on the order of the
+    archives, as sorted rows; map entries compare by key, not by order."""
+    dock = read_table(spark, wh, "dock").select(
+        "station_name",
+        "station_id",
+        "station_latitude",
+        "station_longitude",
+        F.transform_values("station_data", lambda _, v: v.months).alias("months"),
+    )
+    trips = read_table(spark, wh, "trips").select(
+        "year", "start_station_name", "end_station_name", "rideable_type", "trip_count"
+    )
+    tables = {
+        "linegraph": read_table(spark, wh, "linegraph"),
+        "heatmap": read_table(spark, wh, "heatmap"),
+        "dock": dock,
+        "trips": trips,
+    }
+    return {
+        name: sorted(
+            json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+            for r in df.collect()
+        )
+        for name, df in tables.items()
+    }
+
+
+@pytest.mark.parametrize("order", [(2, 3, 4), (4, 2, 3), (3, 4, 2)], ids=str)
+def test_any_order_of_monthly_archives_leaves_the_same_tables(spark, tmp_path, order):
+    """Three monthly archives of one year, one run per archive in
+    ``order``, leave the tables of one run over all three in: the
+    linegraph and heatmap rows, the dock stations' attributes and month
+    maps, and the trips identities with their trip_count. Two columns are
+    left out:
+
+    - dock ``year_starts``/``year_ends`` hold the last-merged archive's
+      counts, not the year's (the reference's replace-on-merge), so they
+      differ by order, as for Alpha and Beta under (4, 2, 3);
+    - trips ``trip_time`` and ``rn`` resolve main-first, as the reference's
+      UPDATE does, so they differ under (4, 2, 3) and (3, 4, 2)."""
+    def write(d, month):
+        name = f"2023{month:02d}-citibike-tripdata.csv"
+        with zipfile.ZipFile(d / f"{name}.zip", "w") as z:
+            z.writestr(name, _month_of_2023(month).to_csv(index=False))
+
+    together_inbox = tmp_path / "together_inbox"
+    together_inbox.mkdir()
+    for month in order:
+        write(together_inbox, month)
+    together = str(tmp_path / "together")
+    assert len(run_pipeline(spark, str(together_inbox), together, top_k=5).processed) == 3
+
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    split = str(tmp_path / "split")
+    for month in order:
+        write(inbox, month)
+        assert len(run_pipeline(spark, str(inbox), split, top_k=5).processed) == 1
+
+    assert _order_invariant_view(spark, split) == _order_invariant_view(spark, together)
+
+
+def test_export_twice_replaces_the_file(spark, inbox, tmp_path):
+    """A second export replaces the DuckDB file: the tables are not
+    appended to, and a table the warehouse does not hold is gone."""
+    wh = str(tmp_path / "warehouse")
+    run_pipeline(spark, inbox, wh, top_k=5)
+    db = str(tmp_path / "out.db")
+    export_warehouse_to_duckdb(wh, db)
+    con = duckdb.connect(db)
+    con.execute("CREATE TABLE stale AS SELECT 1 AS x")
+    con.close()
+    assert export_warehouse_to_duckdb(wh, db) == sorted(DERIVED_TABLES)
+    con = duckdb.connect(db, read_only=True)
+    try:
+        tables = con.execute("SELECT table_name FROM information_schema.tables").fetchall()
+        counts = {
+            t: con.execute(f'SELECT count(*) FROM "{t}"').fetchone()[0] for t in DERIVED_TABLES
+        }
+    finally:
+        con.close()
+    assert {t for (t,) in tables} == set(DERIVED_TABLES)
+    assert counts == {t: read_table(spark, wh, t).count() for t in DERIVED_TABLES}
+
+
+def test_cli_state_path_holds_the_state(spark, inbox, tmp_path, capsys):
+    """``--state PATH`` writes the state there and not in the warehouse,
+    and a rerun with the same path skips every archive."""
+    from citibike_deep_dive_spark.__main__ import main
+
+    wh = tmp_path / "warehouse"
+    state = tmp_path / "elsewhere" / "state"
+    argv = ["--input-dir", inbox, "--warehouse", str(wh), "--state", str(state)]
+    assert main(argv) == 0
+    assert "processed 2 new archive(s), skipped 0" in capsys.readouterr().out
+    assert sorted(load_state(str(state))) == [2019, 2023]
+    assert not (wh / "_state").exists()
+
+    assert main(argv) == 0
+    assert "processed 0 new archive(s), skipped 2" in capsys.readouterr().out
+
+
+def test_cli_top_k_bounds_the_routes_per_year(spark, inbox, tmp_path):
+    """``--top-k 1`` keeps one route per year from each archive; the
+    fixtures' two archives hold one year each."""
+    from citibike_deep_dive_spark.__main__ import main
+
+    wh = str(tmp_path / "warehouse")
+    assert main(["--input-dir", inbox, "--warehouse", wh, "--top-k", "1"]) == 0
+    per_year = read_table(spark, wh, "trips").groupBy("year").count().collect()
+    assert sorted((r["year"], r["count"]) for r in per_year) == [("2019", 1), ("2023", 1)]

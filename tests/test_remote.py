@@ -10,12 +10,14 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
+from citibike_deep_dive_spark.pipeline import DERIVED_TABLES
 from citibike_deep_dive_spark.sources.remote import (
     download_archive,
     fetch_listing,
     get_with_retries,
     run_remote_pipeline,
 )
+from citibike_deep_dive_spark.sources.state import load_state
 
 from tests.trips_fixture import modern_era_pdf
 
@@ -128,6 +130,38 @@ def test_download_cache_short_circuits(bucket_server, tmp_path):
     p1 = download_archive(url, ZIP_KEY, d, backoff=0)
     p2 = download_archive(url, ZIP_KEY, d, backoff=0)
     assert p1 == p2 and hits[f"/{ZIP_KEY}"] == 1
+
+
+def test_download_replaces_an_empty_cached_file(bucket_server, tmp_path):
+    """A zero-byte file in the cache is not a cached archive: it is
+    downloaded again."""
+    url, hits = bucket_server
+    d = tmp_path / "dl"
+    d.mkdir()
+    (d / ZIP_KEY).write_bytes(b"")
+    path = download_archive(url, ZIP_KEY, str(d), backoff=0)
+    assert hits[f"/{ZIP_KEY}"] == 1
+    assert zipfile.ZipFile(path).namelist() == ["202307-citibike-tripdata.csv"]
+
+
+def test_failed_download_raises_and_writes_nothing(bucket_server, spark, tmp_path):
+    """An archive whose download fails on every retry stops the run with
+    the error, before any table or state is written."""
+    url, _ = bucket_server
+    archive_gets = []
+
+    def http_get(u: str) -> bytes:
+        if u.endswith(ZIP_KEY):
+            archive_gets.append(u)
+            raise ConnectionError("archive unreachable")
+        return LISTING_XML.encode()
+
+    wh = tmp_path / "warehouse"
+    with pytest.raises(ConnectionError, match="archive unreachable"):
+        run_remote_pipeline(spark, url + "/", str(wh), http_get=http_get, backoff=0)
+    assert len(archive_gets) == 3
+    assert load_state(str(wh / "_state")) == {}
+    assert [t for t in DERIVED_TABLES if (wh / t).exists()] == []
 
 
 def test_get_with_retries_backoff_then_success():

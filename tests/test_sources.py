@@ -182,6 +182,15 @@ def test_zip_extraction_nested_and_macosx():
     assert members["inner.csv"] == b"a,b\n1,2\n"
 
 
+def test_zip_nested_two_levels_is_not_read():
+    """Extraction recurses one level into nested zips, as the reference
+    does: a CSV inside a zip inside a nested zip yields no member."""
+    deep = _zip_bytes({"deep.csv": b"a,b\n1,2\n"})
+    nested = _zip_bytes({"inner.csv": b"a,b\n3,4\n", "deep.zip": deep})
+    data = _zip_bytes({"nested.zip": nested})
+    assert [name for name, _ in iter_csv_members(io.BytesIO(data))] == ["inner.csv"]
+
+
 def test_extraction_streams_each_member(tmp_path):
     """Extraction holds no member in memory whole: an archive with a 24 MB
     member and a nested zip is staged with a traced peak under 4 MB, and
